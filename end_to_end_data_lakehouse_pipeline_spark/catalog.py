@@ -10,9 +10,11 @@ postgres_init/init.sql).
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -58,17 +60,54 @@ def ensure_read_confs(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+# Per-session schema memo: session -> {(path, st_mtime_ns, st_size):
+# (inferred schema, nanos columns to convert)}. Weak-keyed so a stopped,
+# dropped session takes its entries with it.
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _schema(spark: SparkSession, path: str, name: str) -> tuple[StructType, tuple[str, ...]]:
+    """The table's inferred parquet schema and the bigint epoch-nanos
+    columns in it, memoized per session and file stamp. A path that
+    cannot be stat'ed locally is inferred on every call."""
+    try:
+        st = os.stat(path)
+        key = (path, st.st_mtime_ns, st.st_size)
+    except OSError:
+        key = None
+    memo = _SCHEMAS.setdefault(spark, {})
+    hit = memo.get(key)
+    if hit is None:
+        df = spark.read.parquet(path)
+        dtypes = dict(df.dtypes)
+        nanos = tuple(c for c in NANOS_TS_COLUMNS.get(name, ()) if dtypes.get(c) == "bigint")
+        hit = (df.schema, nanos)
+        if key is not None:
+            memo[key] = hit
+    return hit
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet scan for one table. Catalyst pushes filters/projections into
-    this scan (check ``PushedFilters`` / ``ReadSchema`` in .explain)."""
+    this scan (check ``PushedFilters`` / ``ReadSchema`` in .explain).
+
+    Footer inference runs a Spark job, so its result is memoized: the
+    inferred schema and the list of ``NANOS_TS_COLUMNS`` to convert,
+    keyed by session (weakly — entries are never shared across sessions;
+    ``__spark_entry__`` callers pass their own) and then by ``(path,
+    st_mtime_ns, st_size)``, so a rewritten table file misses and is
+    re-inferred. A warm call launches no job. Every call still returns a FRESH scan
+    (``spark.read.schema(s).parquet(path)``): a shared DataFrame would
+    give both sides of a self-join (``nation`` n1/n2) the same attribute
+    ids. ``ensure_read_confs`` runs on every call."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     ensure_read_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    dtypes = dict(df.dtypes)
-    for c in NANOS_TS_COLUMNS.get(name, ()):
-        if dtypes.get(c) == "bigint":
-            df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
+    path = f"{sf_dir}/{name}.parquet"
+    schema, nanos = _schema(spark, path, name)
+    df = spark.read.schema(schema).parquet(path)
+    for c in nanos:
+        df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
     return df
 
 

@@ -879,7 +879,7 @@ register(
 # arrives carrying a column the stored table has never seen. The merged
 # schema is the union — stored rows back-fill NULL for the new column,
 # only key-touched files are rewritten (untouched files keep the old
-# physical schema; the snapshot read reconciles via mergeSchema). This is
+# physical schema; the snapshot read reconciles via the log schema). This is
 # how production tables grow columns without a table rewrite: the
 # alternative — block the pipeline until a full-table migration — is not
 # an option at 100 TB.
@@ -943,7 +943,7 @@ def build_txnlog_merge_schema_evolution(
     t = TransactionLogTable(spark, os.path.join(ws, "t"), stats_cols=("k",))
     t.append(base, sort_by=["k"])
     t.merge(updates, pks=["k"], order_col="updated_at")
-    snap = t.read(merge_schema=True)  # old files reconcile channel=NULL
+    snap = t.read()  # old files reconcile channel=NULL
     return snap.groupBy("status", "channel").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum("price_cents").cast("long").alias("cents"),
@@ -956,7 +956,7 @@ register(
     doc="File-level ACID MERGE with schema evolution: the CDC batch "
     "carries a new `channel` column — merged schema is the union, "
     "stored rows back-fill NULL, only key-touched files rewrite, and "
-    "the mergeSchema snapshot read reconciles old/new physical schemas; "
+    "the log-schema snapshot read reconciles old/new physical schemas; "
     "final state value-checked against the SQL LWW replay.",
     tags=("lakehouse", "txnlog", "merge", "cdc", "sql"),
 )(build_txnlog_merge_schema_evolution)

@@ -317,11 +317,11 @@ def _exec_merge(
         # ADD COLUMNS the touched files may predate the evolved schema —
         # first-file-wins inference would silently drop evolved-column
         # values from newer files and make UPDATE SET on an evolved
-        # column a no-op (absent from tcols). _read_files_declared
-        # NULL-fills and projects onto the log schema at base_version,
-        # matching update_where/delete_where.
+        # column a no-op (absent from tcols). _scan reads with the log
+        # schema at base_version (evolved columns NULL-fill), matching
+        # update_where/delete_where.
         current = (
-            t._read_files_declared(touched, base_version)
+            t._scan(t._abs(touched), base_version)
             if touched
             else spark.createDataFrame([], t._schema_at(base_version))
         )

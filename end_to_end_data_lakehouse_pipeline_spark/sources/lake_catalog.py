@@ -160,7 +160,7 @@ class LakeCatalog:
         (default) routes through ``format('txnlog')`` so Catalyst-pushed
         range/equality predicates prune the file set from log stats; the
         DataSource projects every file onto the declared log schema
-        (evolved columns NULL-fill), matching ``read(merge_schema=True)``."""
+        (evolved columns NULL-fill), matching ``read()``."""
         if self.pushdown:
             if not self._ds_registered:
                 from .txnlog_source import TxnlogDataSource
@@ -178,7 +178,7 @@ class LakeCatalog:
             if version is not None:
                 r = r.option("version", str(version))
             return r.load()
-        return self.table(name).read(version=version, merge_schema=True)
+        return self.table(name).read(version=version)
 
     def _referenced(self, statement: str) -> list[str]:
         """Catalog tables referenced by ``statement``. Table names are

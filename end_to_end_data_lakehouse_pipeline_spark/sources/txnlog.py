@@ -677,14 +677,17 @@ class TransactionLogTable:
         return [os.path.join(self.path, n) for n in names]
 
     def _schema_at(self, version: int | None) -> StructType | None:
-        metas = self.history()
-        if not metas:
-            return None
-        if version is not None:
-            metas = [m for m in metas if m["version"] <= version]
-        for m in reversed(metas):
-            if "schema" in m:
-                return StructType.fromJson(json.loads(m["schema"]))
+        """Declared schema at ``version`` (default latest): the newest
+        commit at or below it that records one. Walks the log backwards,
+        so it usually opens a single commit file."""
+        for v in reversed(self._log_versions()):
+            if version is not None and v > version:
+                continue
+            with open(self._log_path(v)) as f:
+                for line in f:
+                    meta = json.loads(line).get("meta")
+                    if meta is not None and "schema" in meta:
+                        return StructType.fromJson(json.loads(meta["schema"]))
         return None
 
     def constraints(self, version: int | None = None) -> dict[str, str]:
@@ -852,7 +855,7 @@ class TransactionLogTable:
         COLUMNS``): commit the evolved schema to the log without touching
         any data file. ``cols_ddl`` is Spark DDL, e.g. ``"tier STRING,
         score DOUBLE"``; new columns are nullable and surface as NULL on
-        every pre-evolution file via the declared-schema projection in
+        every pre-evolution file via the declared-schema scan in
         :meth:`read` / the ``txnlog`` DataSource. O(1) commit; snapshot
         files unchanged, so time travel to pre-ALTER versions still reads
         the old schema."""
@@ -889,53 +892,33 @@ class TransactionLogTable:
             except ConcurrentCommitError:
                 continue
 
-    def _project_declared(self, df: DataFrame, version: int | None) -> DataFrame:
-        """Project a file scan onto the DECLARED log schema at ``version``:
-        columns the files lack (added by :meth:`alter_add_columns`, not
-        yet written) surface as typed NULL, column order follows the log.
-        Exactly Delta's read-path contract."""
-        declared = self._schema_at(version)
-        if declared is None:
-            return df
-        present = {c.lower() for c in df.columns}
-        for f in declared.fields:
-            if f.name.lower() not in present:
-                df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-        return df.select(*[f.name for f in declared.fields])
+    def _scan(self, files: Sequence[str], version: int | None) -> DataFrame:
+        """Scan ``files`` (absolute paths) with the DECLARED log schema at
+        ``version``: columns a file lacks (added by
+        :meth:`alter_add_columns` or a later write, not in this file)
+        surface as typed NULL, column order follows the log — exactly
+        Delta's read-path contract. The schema comes from the log, so no
+        footer-inference job runs. A log that records no schema falls
+        back to inferring the union of the files' footers."""
+        schema = self._schema_at(version)
+        if schema is None:
+            return self.spark.read.option("mergeSchema", "true").parquet(*files)
+        return self.spark.read.schema(schema).parquet(*files)
 
-    def _read_files_declared(self, names, version: int | None) -> DataFrame:
-        """Scan specific snapshot files projected onto the declared
-        schema — the write-path (update/delete rewrite) reader, so SET
-        assignments on evolved columns apply instead of silently
-        no-opping on files that predate the ALTER."""
-        df = (
-            self.spark.read.option("mergeSchema", "true")
-            .parquet(*self._abs(names))
-        )
-        return self._project_declared(df, version)
-
-    def read(self, version: int | None = None, merge_schema: bool = False) -> DataFrame:
-        """``merge_schema=True`` unions column sets across files written at
-        different schema versions (streaming_bronze.py:101's
-        ``mergeSchema`` bronze semantics — appends may add columns; older
-        files surface them as NULL), then projects onto the DECLARED log
-        schema — so a column added by :meth:`alter_add_columns` that no
-        file carries yet still appears (as typed NULL), exactly Delta's
-        read-path contract. Off by default: the footer merge costs one
-        extra metadata pass over the snapshot's files."""
+    def read(self, version: int | None = None) -> DataFrame:
+        """Snapshot at ``version`` (default latest), read with the declared
+        log schema via :meth:`_scan`: files written at different schema
+        versions (streaming_bronze.py:101's ``mergeSchema`` bronze
+        semantics — appends may add columns; older files surface them as
+        NULL) and columns added by :meth:`alter_add_columns` that no file
+        carries yet (typed NULL) line up with no footer pass."""
         files = self._abs(self.snapshot(version))
         if not files:
             schema = self._schema_at(version)
             if schema is None:
                 raise FileNotFoundError(f"no committed data at {self.path}")
             return self.spark.createDataFrame([], schema)
-        reader = self.spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*files)
-        if merge_schema:
-            df = self._project_declared(df, version)
-        return df
+        return self._scan(files, version)
 
     def pruned_files(self, col: str, lo=None, hi=None, version: int | None = None) -> list[str]:
         """Data skipping: live files whose [min,max] for ``col`` can
@@ -995,7 +978,7 @@ class TransactionLogTable:
             if schema is None:
                 raise FileNotFoundError(f"no committed data at {self.path}")
             return self.spark.createDataFrame([], schema)
-        df = self.spark.read.parquet(*files)
+        df = self._scan(files, None)
         if lo is not None:
             df = df.filter(F.col(col) >= F.lit(lo))
         if hi is not None:
@@ -1152,9 +1135,7 @@ class TransactionLogTable:
                         os.remove(os.path.join(self.path, a["add"]["name"]))
                     continue
             touched = self.files_touched_by_keys(updates, key, base_version)
-            current = (
-                self.spark.read.parquet(*self._abs(touched)) if touched else None
-            )
+            current = self._scan(self._abs(touched), base_version) if touched else None
             merged = merge_upsert(current, updates, pks, order_col, deleted_col).drop(
                 deleted_col
             )
@@ -1211,7 +1192,7 @@ class TransactionLogTable:
             cand = self._discovery_candidates(condition, base_version)
             if not cand:
                 return base_version
-            df = self._read_files_declared(cand, base_version)
+            df = self._scan(self._abs(cand), base_version)
             touched_abs = {
                 r["f"]
                 for r in df.filter(condition)
@@ -1224,7 +1205,7 @@ class TransactionLogTable:
             touched = {os.path.basename(p.replace("file://", "")) for p in touched_abs}
             # keep rows where the condition is NOT TRUE — a bare NOT(cond)
             # would drop NULL-evaluating rows from both sides (silent loss)
-            keep = self._read_files_declared(touched, base_version).filter(
+            keep = self._scan(self._abs(touched), base_version).filter(
                 ~F.coalesce(F.expr(condition), F.lit(False))
             )
             adds = self._stage_files(keep, sort_by=list(self.stats_cols[:1]))
@@ -1259,7 +1240,7 @@ class TransactionLogTable:
             cand = self._discovery_candidates(condition, base_version)
             if not cand:
                 return base_version
-            df = self._read_files_declared(cand, base_version)
+            df = self._scan(self._abs(cand), base_version)
             touched_abs = {
                 r["f"]
                 for r in df.filter(condition)
@@ -1271,7 +1252,7 @@ class TransactionLogTable:
                 return base_version
             touched = {os.path.basename(p.replace("file://", "")) for p in touched_abs}
             cond = F.coalesce(F.expr(condition), F.lit(False))
-            current = self._read_files_declared(touched, base_version)
+            current = self._scan(self._abs(touched), base_version)
             rewritten = current.select(
                 *[
                     F.when(cond, F.expr(assignments[c]).cast(dt))
@@ -1348,12 +1329,12 @@ class TransactionLogTable:
             n_out = int(
                 max(1, sum(snap[n].get("bytes", 0) for n in small) // max_file_bytes)
             )
-            # declared-schema projection, NOT bare spark.read.parquet:
+            # declared-schema scan, NOT bare spark.read.parquet:
             # after ALTER ADD COLUMNS the smalls may straddle the
             # evolution — first-file-wins inference would silently drop
             # evolved-column values from newer files (same hazard ADVICE
             # r4 flagged for MERGE's touched-file read)
-            df = self._read_files_declared(small, base_version)
+            df = self._scan(self._abs(small), base_version)
             if zorder_by:
                 adds = self._stage_files(df, zorder_by=tuple(zorder_by))
             else:

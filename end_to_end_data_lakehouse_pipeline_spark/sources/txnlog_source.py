@@ -85,7 +85,7 @@ def _read_file(path: str, schema):
     """Stream a parquet file's Arrow batches PROJECTED onto the declared
     table schema: snapshots that straddle a schema evolution contain
     older files missing later-added columns — those surface as typed
-    nulls, mirroring ``TransactionLogTable.read(merge_schema=True)``
+    nulls, mirroring ``TransactionLogTable.read``
     (ADVICE r3 medium). Columns are emitted in declared order; a type
     drift (e.g. int32 file vs int64 declared) is cast."""
     import pyarrow as pa

@@ -31,3 +31,25 @@ def duck(sf_dir):
     con = duckdb.connect()
     load_oracle(con, sf_dir)
     yield con
+
+
+@pytest.fixture()
+def jobs_launched(spark):
+    """``jobs_launched(fn)`` runs ``fn()`` under a fresh job group and
+    returns the ids of the Spark jobs it launched. The listener bus is
+    drained first, so a job that ran is never missed."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = uuid.uuid4().hex
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -234,7 +234,7 @@ def test_sql_merge_reads_declared_schema_after_alter(spark, tmp_path):
         """,
         tables={"ev": t},
     )
-    got = {r.k: (r.v, r.tier) for r in t.read(merge_schema=True).collect()}
+    got = {r.k: (r.v, r.tier) for r in t.read().collect()}
     # evolved column updated on BOTH the pre-evolution file's row (k=2)
     # and the post-evolution file's row (k=3); untouched row NULL-fills
     assert got[2] == ("B2", "silver")

@@ -298,7 +298,7 @@ def test_txnlog_merge_schema_evolution_rewrites_only_touched(spark, tmp_path):
         [(7, 2, "web")], "k long, ver long, channel string"
     )
     t.merge(upd, pks=["k"], order_col="ver")
-    snap = t.read(merge_schema=True)
+    snap = t.read()
     assert snap.count() == 100
     assert snap.filter(F.col("channel").isNotNull()).count() == 1
     survivors = [f for f in t.snapshot() if f in files_v1]

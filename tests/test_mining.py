@@ -77,3 +77,18 @@ def test_label_propagation_invariants(spark, sf_dir):
     assert all(r.n_members >= 1 for r in rows)
     again = build_label_propagation_communities(spark, sf_dir).collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
+
+
+def test_label_propagation_rejects_labels_outside_pack_range(spark):
+    """The winner pack -c*10^19 + lab orders like (c DESC, lab ASC) only
+    for 0 <= lab < 10^19; a negative node id must fail the query, not
+    pick a wrong winner."""
+    from end_to_end_data_lakehouse_pipeline_spark.plans.advanced import lpa_rounds
+
+    ok = lpa_rounds(spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long"))
+    assert sorted(map(tuple, ok.collect())) == [(1, 2), (2, 1)]
+    bad = spark.createDataFrame(
+        [(-1, 2), (2, -1), (2, 3), (3, 2)], "src long, dst long"
+    )
+    with pytest.raises(Exception, match=r"0 <= label < 10\^19, got -1"):
+        lpa_rounds(bad).collect()

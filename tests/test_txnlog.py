@@ -356,7 +356,7 @@ def test_schema_evolution_merge_schema_read(spark, tbl):
     tbl.append(
         spark.createDataFrame([(2, "b", 1, "extra")], ["k", "v", "updated_at", "new_col"])
     )
-    df = tbl.read(merge_schema=True)
+    df = tbl.read()
     assert set(df.columns) == {"k", "v", "updated_at", "new_col"}
     got = {r["k"]: r["new_col"] for r in df.collect()}
     assert got == {1: None, 2: "extra"}
@@ -581,16 +581,16 @@ def test_alter_add_columns_metadata_only_evolution(spark, tmp_path):
     assert set(t.snapshot()) == files_before
     assert t.latest_version() == v
     # declared projection: evolved columns appear as typed NULL
-    df = t.read(merge_schema=True)
+    df = t.read()
     assert df.columns == ["k", "v", "tier", "score"]
     assert all(r.tier is None and r.score is None for r in df.collect())
     # UPDATE on the evolved column applies (would silently no-op if the
     # rewrite read raw file schemas)
     t.update_where("k = 1", {"tier": "'gold'"})
-    got = {r.k: r.tier for r in t.read(merge_schema=True).collect()}
+    got = {r.k: r.tier for r in t.read().collect()}
     assert got == {1: "gold", 2: None}
     # time travel to the pre-ALTER version keeps the old schema
-    assert t.read(version=1, merge_schema=True).columns == ["k", "v"]
+    assert t.read(version=1).columns == ["k", "v"]
     # duplicate column rejected
     import pytest as _pytest
 
@@ -852,3 +852,55 @@ def test_ivm_multibatch_exactly_once(spark, tmp_path):
         .collect()
     }
     assert final == direct
+
+
+def test_reads_take_the_schema_from_the_log(spark, tbl, jobs_launched):
+    """read / read_pruned / time travel build their frame from the log's
+    recorded schema: no footer-inference job runs before an action."""
+    tbl.append(_mk(spark, [(1, "a", 1), (2, "b", 1)]), sort_by=["k"])
+    tbl.append(_mk(spark, [(10, "x", 1)]), sort_by=["k"])
+    frames = {}
+    assert jobs_launched(lambda: frames.update(latest=tbl.read())) == []
+    assert jobs_launched(lambda: frames.update(pruned=tbl.read_pruned("k", 10, 10))) == []
+    assert jobs_launched(lambda: frames.update(v1=tbl.read(version=1))) == []
+    assert frames["latest"].count() == 3
+    assert [r.k for r in frames["pruned"].collect()] == [10]
+    assert sorted(r.k for r in frames["v1"].collect()) == [1, 2]
+
+
+def test_merge_after_alter_keeps_evolved_values(spark, tbl):
+    tbl.append(_mk(spark, [(1, "a", 1), (2, "b", 1)]), sort_by=["k"])
+    tbl.append(_mk(spark, [(10, "x", 1), (11, "y", 1)]), sort_by=["k"])
+    tbl.alter_add_columns("tier STRING")
+    tbl.update_where("k = 10", {"tier": "'gold'"})
+    # touches only the post-ALTER file: its untouched row keeps 'gold'
+    tbl.merge(_mk(spark, [(11, "Y", 2)]), pks=["k"], order_col="updated_at")
+    got = {r.k: (r.v, r.tier) for r in tbl.read().collect()}
+    assert got == {1: ("a", None), 2: ("b", None), 10: ("x", "gold"), 11: ("Y", None)}
+    # touches only a pre-ALTER file, which has no tier column: the merged
+    # schema must still carry tier, or the untouched 'gold' disappears
+    tbl.merge(_mk(spark, [(1, "A", 2)]), pks=["k"], order_col="updated_at")
+    assert tbl.read().columns == ["k", "v", "updated_at", "tier"]
+    got = {r.k: (r.v, r.tier) for r in tbl.read().collect()}
+    assert got == {1: ("A", None), 2: ("b", None), 10: ("x", "gold"), 11: ("Y", None)}
+
+
+def test_log_without_schema_reads_by_inference(spark, tbl):
+    tbl.append(_mk(spark, [(1, "a", 1), (2, "b", 1)]), sort_by=["k"])
+    tbl.append(
+        spark.createDataFrame([(3, "c", 1, "e")], ["k", "v", "updated_at", "extra"]),
+        sort_by=["k"],
+    )
+    # strip the recorded schema, as in a log written before it was kept
+    for v in tbl._log_versions():
+        path = tbl._log_path(v)
+        with open(path) as f:
+            actions = [json.loads(line) for line in f]
+        for a in actions:
+            a.get("meta", {}).pop("schema", None)
+        with open(path, "w") as f:
+            f.write("".join(json.dumps(a) + "\n" for a in actions))
+    assert tbl._schema_at(None) is None
+    got = {r.k: r.extra for r in tbl.read().collect()}
+    assert got == {1: None, 2: None, 3: "e"}
+    assert [r.v for r in tbl.read_pruned("k", 2, 3).orderBy("k").collect()] == ["b", "c"]

@@ -73,7 +73,7 @@ def test_stream_resumes_from_checkpoint(spark, tbl, tmp_path):
 def test_batch_read_across_schema_evolution(spark, tbl):
     """ADVICE r3 medium: a snapshot straddling a schema evolution (older
     files missing later-added columns) must read through the DataSource
-    with typed NULL-fill, mirroring read(merge_schema=True)."""
+    with typed NULL-fill, mirroring read()."""
     tbl.append(
         spark.createDataFrame(
             [(200, "evolved", 3, 9.5)], ["k", "v", "ts", "score"]

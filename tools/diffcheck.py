@@ -6,16 +6,31 @@ values after sorting rows (strictly stronger than the driver's
 order-insensitive value hash — if this passes, the driver's hash matches).
 
 Usage:  python tools/diffcheck.py [sf_dir] [query ...]
+        python tools/diffcheck.py --touched <git-ref> [sf_dir] [query ...]
+
+``--touched`` checks the queries a change touches: the files in
+``git diff --name-only <git-ref>`` (plus untracked files) select
+registered queries — a changed builder module selects the queries it
+defines; any other changed package module (``catalog.py``,
+``session.py``, ``sources/``, shared helpers) or ``__spark_entry__.py``
+selects every query. Given query names narrow that selection. The
+selected queries are diffed at sf0.001, sf0.01 and sf0.1 (siblings of
+``sf_dir``), then run through ``tools/tz_probe.py`` at sf0.01, which
+uses a vanilla non-UTC session.
 """
 
 from __future__ import annotations
 
 import os
+import subprocess
 import sys
 import time
 import traceback
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+PACKAGE = "end_to_end_data_lakehouse_pipeline_spark/"
+TOUCHED_SFS = ("sf0.001", "sf0.01", "sf0.1")
 
 import duckdb
 import numpy as np
@@ -102,18 +117,76 @@ def main() -> int:
         i = argv.index("--json")
         json_out = argv[i + 1]
         del argv[i : i + 2]
+    ref = None
+    if "--touched" in argv:
+        i = argv.index("--touched")
+        ref = argv[i + 1]
+        del argv[i : i + 2]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.001"
     only = set(argv[1:])
 
     from end_to_end_data_lakehouse_pipeline_spark import plans
     from end_to_end_data_lakehouse_pipeline_spark.session import get_spark
 
+    specs = plans.specs()
+    if ref is None:
+        names = [n for n in specs if not only or n in only]
+        return 1 if check(get_spark("diffcheck"), sf_dir, specs, names, json_out) else 0
+    names = [n for n in touched_queries(changed_files(ref), specs) if not only or n in only]
+    print(f"{len(names)} queries touched since {ref}: {' '.join(names)}")
+    if not names:
+        return 0
     spark = get_spark("diffcheck")
+    root = os.path.dirname(sf_dir.rstrip("/"))
+    failed = {}
+    for sf in TOUCHED_SFS:
+        print(f"\n== {sf}")
+        failed[sf] = check(spark, os.path.join(root, sf), specs, names)
+    spark.stop()  # the probe starts its own vanilla session
+    probe = subprocess.run(
+        [sys.executable, os.path.join(ROOT, "tools", "tz_probe.py"), os.path.join(root, "sf0.01"), *names]
+    )
+    print(f"\ntouched: {len(names)} queries; failed per sf: {failed}; tz probe exit {probe.returncode}")
+    return 1 if any(failed.values()) or probe.returncode else 0
+
+
+def changed_files(ref: str) -> list[str]:
+    """Repo-relative paths changed in the working tree since ``ref``,
+    plus untracked files."""
+
+    def git(*args: str) -> list[str]:
+        out = subprocess.run(
+            ["git", *args], cwd=ROOT, check=True, capture_output=True, text=True
+        ).stdout
+        return [line for line in out.splitlines() if line]
+
+    return git("diff", "--name-only", ref) + git("ls-files", "--others", "--exclude-standard")
+
+
+def touched_queries(changed: list[str], specs: dict) -> list[str]:
+    """Registered queries that ``changed`` paths touch (see the module
+    doc for the mapping), in registry order."""
+    module_file = {
+        name: os.path.relpath(sys.modules[spec.fn.__module__].__file__, ROOT)
+        for name, spec in specs.items()
+    }
+    builders = set(module_file.values())
+    selected: set[str] = set()
+    for path in changed:
+        if not path.endswith(".py"):
+            continue
+        if path == "__spark_entry__.py" or (path.startswith(PACKAGE) and path not in builders):
+            return list(specs)
+        selected |= {n for n, f in module_file.items() if f == path}
+    return [n for n in specs if n in selected]
+
+
+def check(spark, sf_dir: str, specs: dict, names: list[str], json_out: str | None = None) -> list[str]:
+    """Diff ``names`` against their oracles on ``sf_dir``; returns the
+    names that failed."""
     con = duckdb.connect()
     load_oracle(con, sf_dir)
 
-    specs = plans.specs()
-    names = [n for n in specs if not only or n in only]
     failed = []
     # --json: the driver's CORRECTNESS artifact shape per query, so the
     # never-driver-sampled families (txnlog/connector/drain/tpch/mv) have
@@ -179,7 +252,7 @@ def main() -> int:
         with open(json_out, "w") as fh:
             json.dump(payload, fh, indent=1, sort_keys=True)
         print(f"wrote {json_out}")
-    return 1 if failed else 0
+    return failed
 
 
 if __name__ == "__main__":
