@@ -321,7 +321,7 @@ def _exec_merge(
         # schema at base_version (evolved columns NULL-fill), matching
         # update_where/delete_where.
         current = (
-            t._scan(t._abs(touched), base_version)
+            t._scan(touched, base_version)
             if touched
             else spark.createDataFrame([], t._schema_at(base_version))
         )

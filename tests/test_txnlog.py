@@ -904,3 +904,25 @@ def test_log_without_schema_reads_by_inference(spark, tbl):
     got = {r.k: r.extra for r in tbl.read().collect()}
     assert got == {1: None, 2: None, 3: "e"}
     assert [r.v for r in tbl.read_pruned("k", 2, 3).orderBy("k").collect()] == ["b", "c"]
+
+
+def test_merge_or_append_omitting_a_column_keeps_its_values(spark, tbl):
+    """Only an overwrite narrows the schema: a MERGE that touches no file
+    and an append, each without ``extra``, leave it in the log, so the
+    next rewrite of the file that stores it keeps its values."""
+    cols = ("k", "v", "updated_at", "extra")
+    tbl.append(_mk(spark, [(1, "a", 1, "e1"), (2, "b", 1, "e2")], cols), sort_by=["k"])
+    # every key is new: no file is touched
+    tbl.merge(_mk(spark, [(100, "n", 2)]), pks=["k"], order_col="updated_at")
+    tbl.append(_mk(spark, [(200, "m", 2)]), sort_by=["k"])
+    assert tbl.read().columns == list(cols)
+    # rewrites the file holding k=1 and k=2
+    tbl.merge(_mk(spark, [(1, "A", 3)]), pks=["k"], order_col="updated_at")
+    got = {r.k: (r.v, r.extra) for r in tbl.read().collect()}
+    assert got == {
+        1: ("A", None), 2: ("b", "e2"), 100: ("n", None), 200: ("m", None)
+    }
+    assert {r.k: r.extra for r in tbl.read_pruned("k", 2, 2).collect()} == {2: "e2"}
+    # an overwrite still replaces the schema
+    tbl.overwrite(_mk(spark, [(7, "z", 4)]))
+    assert tbl.read().columns == ["k", "v", "updated_at"]

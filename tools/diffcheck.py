@@ -11,7 +11,8 @@ Usage:  python tools/diffcheck.py [sf_dir] [query ...]
 ``--touched`` checks the queries a change touches: the files in
 ``git diff --name-only <git-ref>`` (plus untracked files) select
 registered queries — a changed builder module selects the queries it
-defines; any other changed package module (``catalog.py``,
+defines and those of every builder module that imports it, directly or
+through another builder; any other changed package module (``catalog.py``,
 ``session.py``, ``sources/``, shared helpers) or ``__spark_entry__.py``
 selects every query. Given query names narrow that selection. The
 selected queries are diffed at sf0.001, sf0.01 and sf0.1 (siblings of
@@ -21,6 +22,7 @@ uses a vanilla non-UTC session.
 
 from __future__ import annotations
 
+import ast
 import os
 import subprocess
 import sys
@@ -171,14 +173,44 @@ def touched_queries(changed: list[str], specs: dict) -> list[str]:
         for name, spec in specs.items()
     }
     builders = set(module_file.values())
-    selected: set[str] = set()
+    imports = {b: module_imports(b) for b in builders}
+    touched: set[str] = set()
     for path in changed:
         if not path.endswith(".py"):
             continue
         if path == "__spark_entry__.py" or (path.startswith(PACKAGE) and path not in builders):
             return list(specs)
-        selected |= {n for n, f in module_file.items() if f == path}
-    return [n for n in specs if n in selected]
+        touched.add(path)
+    # builder modules import each other (plans/text.py's tokenizer feeds
+    # most text builders): a change reaches every builder that imports a
+    # touched one, directly or through another builder
+    while True:
+        more = {b for b, deps in imports.items() if deps & touched} - touched
+        if not more:
+            break
+        touched |= more
+    return [n for n in specs if module_file[n] in touched]
+
+
+def module_imports(path: str) -> set[str]:
+    """Repo-relative files of the package modules that the module at
+    ``path`` imports anywhere in its body (function-level imports too)."""
+    package = os.path.dirname(path).split("/")
+    found: set[str] = set()
+    for node in ast.walk(ast.parse(open(os.path.join(ROOT, path)).read())):
+        if isinstance(node, ast.ImportFrom):
+            base = package[: len(package) - node.level + 1] if node.level else []
+            mod = base + (node.module.split(".") if node.module else [])
+            candidates = [mod] + [mod + [a.name] for a in node.names]
+        elif isinstance(node, ast.Import):
+            candidates = [a.name.split(".") for a in node.names]
+        else:
+            continue
+        for parts in candidates:
+            for rel in ("/".join(parts) + ".py", "/".join(parts) + "/__init__.py"):
+                if rel.startswith(PACKAGE) and os.path.isfile(os.path.join(ROOT, rel)):
+                    found.add(rel)
+    return found
 
 
 def check(spark, sf_dir: str, specs: dict, names: list[str], json_out: str | None = None) -> list[str]:
