@@ -57,7 +57,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .txnlog import ConcurrentCommitError, TransactionLogTable
+from .txnlog import ConcurrentCommitError, TransactionLogTable, local_frame
 
 _MERGE_RE = re.compile(
     r"^\s*MERGE\s+INTO\s+(?P<target>\w+)(?:\s+(?:AS\s+)?(?P<talias>\w+))?"
@@ -323,7 +323,7 @@ def _exec_merge(
         current = (
             t._scan(touched, base_version)
             if touched
-            else spark.createDataFrame([], t._schema_at(base_version))
+            else local_frame(spark, schema=t._schema_at(base_version))
         )
         tcols = current.columns
         ttypes = dict(current.dtypes)

@@ -35,14 +35,18 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
+def _lww_window(pks: Sequence[str], order_col: str, tiebreak: Sequence[str]):
+    order = [F.col(order_col).desc()] + [F.col(c).desc() for c in tiebreak]
+    return Window.partitionBy(*pks).orderBy(*order)
+
+
 def latest_per_key(
     df: DataFrame, pks: Sequence[str], order_col: str, tiebreak: Sequence[str] = ()
 ) -> DataFrame:
     """W1: keep the latest row per PK (batch_silver.py:107-112), with an
     explicit total order — the reference's bare timestamp sort is
     non-deterministic on ties (SURVEY.md §4 'quirks to not copy')."""
-    order = [F.col(order_col).desc()] + [F.col(c).desc() for c in tiebreak]
-    w = Window.partitionBy(*pks).orderBy(*order)
+    w = _lww_window(pks, order_col, tiebreak)
     return (
         df.withColumn("_row_num", F.row_number().over(w))
         .filter(F.col("_row_num") == 1)
@@ -67,38 +71,43 @@ def merge_upsert(
     (pk, order_col) need ``tiebreak`` columns (appended after _src_rank) to
     pick a total-order winner; without them the winner among exact
     duplicates-by-(pk, order_col, src) is row_number-arbitrary. Pass e.g.
-    an ingest offset or payload hash when the source can emit such ties."""
-    upd = updates.withColumn("_src_rank", F.lit(1))
-    if current is not None:
-        if deleted_col in updates.columns and deleted_col not in current.columns:
-            # a stored table written before any delete arrived has no
-            # soft-delete column; its rows are by definition live
-            current = current.withColumn(deleted_col, F.lit(False))
+    an ingest offset or payload hash when the source can emit such ties.
+
+    Built from a handful of projections: every DataFrame step costs a
+    driver-side analysis pass, which dominates a small MERGE."""
+    upd_types = {f.name: f.dataType for f in updates.schema.fields}
+    if current is None:
+        out_cols = list(upd_types)
+        unioned = updates.select("*", F.lit(1).alias("_src_rank"))
+    else:
         # schema evolution (Delta mergeSchema semantics, round 9): the
         # merged schema is the UNION of both sides — a column only the
         # updates carry back-fills NULL on stored rows, a column the
         # updates dropped keeps its stored values and NULL-fills update
-        # rows. Types come from whichever side has the column.
-        upd_types = dict(zip(updates.schema.names, updates.schema.fields))
-        cur_types = dict(zip(current.schema.names, current.schema.fields))
-        for name, field in upd_types.items():
-            if name not in cur_types:
-                current = current.withColumn(
-                    name, F.lit(None).cast(field.dataType)
-                )
-        for name, field in cur_types.items():
-            if name not in upd_types:
-                upd = upd.withColumn(name, F.lit(None).cast(field.dataType))
-        out_cols = list(updates.columns) + [
-            c for c in current.columns if c not in set(updates.columns)
-        ]
-        cur = current.select(*out_cols).withColumn("_src_rank", F.lit(0))
-        upd = cur.unionByName(upd.select(*out_cols, "_src_rank"))
-    merged = latest_per_key(upd, pks, order_col, tiebreak=["_src_rank", *tiebreak])
-    out = merged.drop("_src_rank")
-    if deleted_col in out.columns:
-        out = out.filter(~F.coalesce(F.col(deleted_col), F.lit(False)))
-    return out
+        # rows. Types come from whichever side has the column. A stored
+        # table written before any delete arrived has no soft-delete
+        # column; its rows are by definition live.
+        cur_types = {f.name: f.dataType for f in current.schema.fields}
+        out_cols = list(upd_types) + [c for c in cur_types if c not in upd_types]
+        types = {**cur_types, **upd_types}
+
+        def aligned(df: DataFrame, have: dict, rank: int) -> DataFrame:
+            fill = {deleted_col: F.lit(False)} if rank == 0 else {}
+            return df.select(
+                *[
+                    c if c in have else fill.get(c, F.lit(None)).cast(types[c]).alias(c)
+                    for c in out_cols
+                ],
+                F.lit(rank).alias("_src_rank"),
+            )
+
+        unioned = aligned(current, cur_types, 0).unionByName(aligned(updates, upd_types, 1))
+    w = _lww_window(pks, order_col, ["_src_rank", *tiebreak])
+    keep = F.col("_row_num") == 1
+    if deleted_col in out_cols:
+        keep = keep & ~F.coalesce(F.col(deleted_col), F.lit(False))
+    ranked = unioned.select("*", F.row_number().over(w).alias("_row_num"))
+    return ranked.filter(keep).select(*out_cols)
 
 
 def write_bucketed(

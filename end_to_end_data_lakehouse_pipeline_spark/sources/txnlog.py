@@ -56,13 +56,18 @@ import time
 import uuid
 from collections.abc import Iterable, Sequence
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructField, StructType
 
 from .lakehouse import merge_upsert
 
 LOG_DIR = "_txn_log"
+# compact()'s output file size, also the unit a MERGE rewrite is sized in
+TARGET_FILE_BYTES = 128 * 1024 * 1024
 # stats are harvested only for these physical types — min/max on
 # complex/binary columns is not useful for range pruning
 _STATABLE = ("int32", "int64", "float", "double", "string", "date32")
@@ -224,12 +229,21 @@ def _all_nullable(dt):
     return dt
 
 
-def _file_stats(path: str, cols: Sequence[str]) -> dict:
-    """min/max/null-count per tracked column from the parquet FOOTER
-    (row-group metadata only — no data pages are read)."""
-    import pyarrow.parquet as pq
+def local_frame(
+    spark: SparkSession, table: pa.Table | None = None, schema: StructType | None = None
+) -> DataFrame:
+    """A driver-side table as a DataFrame, through the JVM Arrow reader:
+    it plans as a ``LocalTableScan``, so scanning it runs no Python worker
+    and no job (``createDataFrame(list)`` plans a ``PythonRDD``).
+    ``table=None`` gives the empty frame of ``schema``."""
+    if table is None:
+        table = to_arrow_schema(schema).empty_table()
+    return spark.createDataFrame(table, schema)
 
-    md = pq.ParquetFile(path).metadata
+
+def _file_stats(md: pq.FileMetaData, cols: Sequence[str]) -> dict:
+    """min/max/null-count per tracked column from a parquet FOOTER
+    (row-group metadata only — no data pages are read)."""
     names = {md.schema.column(i).name: i for i in range(md.num_columns)}
     out: dict[str, dict] = {}
     for col in cols:
@@ -442,9 +456,10 @@ class TransactionLogTable:
         zorder_by: Sequence[str] = (),
     ) -> list[dict]:
         """Write ``df``'s files into the table root under unique names and
-        return their add-action entries (stats from the footers). Files
-        are invisible to readers until a commit references them; a crash
-        here strands orphans that ``vacuum`` removes.
+        return their add-action entries: bytes, and the row count and
+        stats from each footer. Files are invisible to readers until a
+        commit references them; a crash here strands orphans that
+        ``vacuum`` removes.
 
         ``zorder_by=(a, b)`` clusters files by the Morton interleave of
         the two keys (functions/zorder.py — the Delta OPTIMIZE ZORDER
@@ -474,6 +489,9 @@ class TransactionLogTable:
                 from ..functions.zorder import zorder_cluster
 
                 df = zorder_cluster(df, *zorder_by, n_files=n_files)
+            elif sort_by and n_files == 1:
+                # one file needs no range shuffle: a single sorted partition
+                df = df.coalesce(1).sortWithinPartitions(*sort_by)
             elif sort_by:
                 # range-partition + sort by the leading key so per-file
                 # [min,max] ranges are disjoint and tight — this is what
@@ -497,9 +515,14 @@ class TransactionLogTable:
                 unique = f"part-{uuid.uuid4().hex}.parquet"
                 dst = os.path.join(self.path, unique)
                 os.rename(src, dst)
-                entry = {"name": unique, "bytes": os.path.getsize(dst)}
+                md = pq.ParquetFile(dst).metadata
+                entry = {
+                    "name": unique,
+                    "bytes": os.path.getsize(dst),
+                    "num_rows": md.num_rows,
+                }
                 if self.stats_cols:
-                    entry["stats"] = _file_stats(dst, self.stats_cols)
+                    entry["stats"] = _file_stats(md, self.stats_cols)
                 if self.partition_by:
                     # exact per-file partition tuple: min==max by
                     # construction, recorded explicitly Delta-style
@@ -930,8 +953,20 @@ class TransactionLogTable:
             schema = self._schema_at(version)
             if schema is None:
                 raise FileNotFoundError(f"no committed data at {self.path}")
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, schema=schema)
         return self._scan(files, version)
+
+    def num_rows(self, version: int | None = None) -> int:
+        """Row count of the snapshot at ``version`` (default latest), summed
+        from the footer counts its add entries record: no Spark job. A
+        file added by a log that predates those counts has its footer
+        read instead."""
+        return sum(
+            e["num_rows"]
+            if "num_rows" in e
+            else pq.ParquetFile(os.path.join(self.path, n)).metadata.num_rows
+            for n, e in self.snapshot(version).items()
+        )
 
     def pruned_files(self, col: str, lo=None, hi=None, version: int | None = None) -> list[str]:
         """Data skipping: absolute paths of the live files whose [min,max]
@@ -993,7 +1028,7 @@ class TransactionLogTable:
             schema = self._schema_at(None)
             if schema is None:
                 raise FileNotFoundError(f"no committed data at {self.path}")
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, schema=schema)
         df = self._scan(files, None)
         if lo is not None:
             df = df.filter(F.col(col) >= F.lit(lo))
@@ -1023,18 +1058,17 @@ class TransactionLogTable:
         a file-only diff would misreport them as delete+insert."""
         snap_a = self.snapshot(from_version)
         snap_b = self.snapshot(to_version)
-        removed = self._abs(set(snap_a) - set(snap_b))
-        added = self._abs(set(snap_b) - set(snap_a))
+        removed = set(snap_a) - set(snap_b)
+        added = set(snap_b) - set(snap_a)
         schema = self._schema_at(to_version)
         if schema is None:
             raise FileNotFoundError(f"no committed data at {self.path}")
-        empty = self.spark.createDataFrame([], schema)
-        # mergeSchema on BOTH sides: the diff may straddle a schema
-        # evolution (older files lack later-added columns), and a plain
-        # read would infer from one arbitrary file
-        rd = self.spark.read.option("mergeSchema", "true")
-        old = rd.parquet(*removed) if removed else empty
-        new = rd.parquet(*added) if added else empty
+        empty = local_frame(self.spark, schema=schema)
+        # each side reads with ITS OWN version's log schema: the diff may
+        # straddle a schema evolution (older files lack later-added
+        # columns, which surface as NULL), and no footer is inferred
+        old = self._scan(removed, from_version) if removed else empty
+        new = self._scan(added, to_version) if added else empty
         # align to the UNION of columns; a column absent on one side
         # surfaces as NULL there (so materializing a value in a new
         # column IS a change, which is the honest CDF semantics)
@@ -1084,22 +1118,28 @@ class TransactionLogTable:
         [min,max] range on ``key`` contains at least one value of
         ``keys_df``'s ``key`` column (files without stats are always
         candidates). Runs as a broadcast range-join of the (small,
-        O(#files)) stats list against the distinct keys — no driver-side
-        key collection, so it holds when keys_df carries millions of
-        keys. Shared by merge() and the SQL MERGE surface (dml.py)."""
+        O(#files)) stats list against the keys — no driver-side key
+        collection, so it holds when keys_df carries millions of keys; the
+        distinct over the hit files dedups repeated keys. Shared by
+        merge() and the SQL MERGE surface (dml.py)."""
         snap = self.snapshot(base_version)
-        ranged = [
-            (n, e["stats"][key]["min"], e["stats"][key]["max"])
-            for n, e in snap.items()
-            if e.get("stats", {}).get(key) is not None
-        ]
-        unranged = [n for n in snap if snap[n].get("stats", {}).get(key) is None]
-        touched = set(unranged)
+        ranged = {
+            n: e["stats"][key] for n, e in snap.items() if e.get("stats", {}).get(key) is not None
+        }
+        touched = set(snap) - set(ranged)
         if ranged:
-            ranges_df = self.spark.createDataFrame(ranged, ["_file", "_min", "_max"])
+            ranges_df = local_frame(
+                self.spark,
+                pa.table(
+                    {
+                        "_file": list(ranged),
+                        "_min": [st["min"] for st in ranged.values()],
+                        "_max": [st["max"] for st in ranged.values()],
+                    }
+                ),
+            )
             hits = (
                 keys_df.select(F.col(key).alias("_k"))
-                .distinct()
                 .join(
                     F.broadcast(ranges_df),
                     (F.col("_k") >= F.col("_min")) & (F.col("_k") <= F.col("_max")),
@@ -1113,55 +1153,67 @@ class TransactionLogTable:
 
     def merge(
         self,
-        updates: DataFrame,
+        updates: DataFrame | None,
         pks: Sequence[str],
         order_col: str,
         deleted_col: str = "_deleted",
         max_retries: int = 5,
-    ) -> int:
+        txns: dict[str, int] | None = None,
+    ) -> int | None:
         """File-level MERGE (DeltaTable.merge cost profile,
         batch_silver.py:146-159): rewrite ONLY files whose ``pks[0]``
         range contains at least one update key; every other live file is
-        untouched — byte-identical, same log entry.
+        untouched — byte-identical, same log entry. The rewrite is sized
+        like compact(): one file per ``TARGET_FILE_BYTES`` of touched
+        files, at least one.
 
         Candidate selection runs as a broadcast range-join of the
-        (small, O(#files)) stats list against the updates' distinct keys
-        — no driver-side key collection, so it holds when updates carry
+        (small, O(#files)) stats list against the updates' keys — no
+        driver-side key collection, so it holds when updates carry
         millions of keys. On a commit conflict the whole merge re-executes
         against the winner's snapshot (serializable outcome), up to
         ``max_retries`` times.
+
+        ``txns`` ({app: version}) are recorded as ``txn`` actions in the
+        same commit: the consumed-input watermark of an incremental
+        caller. If any of those apps is already recorded at the base
+        snapshot, another writer consumed that input first; nothing is
+        committed and the merge returns None. ``updates=None`` commits a
+        metadata-only ``merge`` version (with ``txns``) and runs no job.
         """
         key = pks[0]
+        txn_actions = [{"txn": {"app": a, "version": v}} for a, v in (txns or {}).items()]
         for _ in range(max_retries):
             base_version = self.latest_version()
-            if base_version is None:
+            if txns and not set(txns).isdisjoint(self.txn_versions(base_version)):
+                return None
+            touched: set[str] = set()
+            adds: list[dict] = []
+            if updates is None:
+                meta = self._meta("merge")
+            else:
+                n_files = None
+                if base_version is not None:
+                    snap = self.snapshot(base_version)
+                    touched = self.files_touched_by_keys(updates, key, base_version)
+                    n_files = max(
+                        1, sum(snap[n].get("bytes", 0) for n in touched) // TARGET_FILE_BYTES
+                    )
+                current = self._scan(touched, base_version) if touched else None
                 # drop the soft-delete flag from the STORED table: deleted
                 # rows are already filtered, and keeping a constant-False
                 # column would fork the snapshot schema between tables
                 # written before vs after the first delete arrived
-                merged = merge_upsert(None, updates, pks, order_col, deleted_col).drop(
+                merged = merge_upsert(current, updates, pks, order_col, deleted_col).drop(
                     deleted_col
                 )
-                adds = self._stage_files(merged, sort_by=[key])
-                try:
-                    self._commit(1, [self._meta("merge", merged), *adds])
-                    return 1
-                except ConcurrentCommitError:
-                    for a in adds:
-                        os.remove(os.path.join(self.path, a["add"]["name"]))
-                    continue
-            touched = self.files_touched_by_keys(updates, key, base_version)
-            current = self._scan(touched, base_version) if touched else None
-            merged = merge_upsert(current, updates, pks, order_col, deleted_col).drop(
-                deleted_col
-            )
-            adds = self._stage_files(merged, sort_by=[key])
+                adds = self._stage_files(merged, sort_by=[key], n_files=n_files)
+                meta = self._meta("merge", merged)
             removes = [{"remove": {"name": n}} for n in sorted(touched)]
+            version = (base_version or 0) + 1
             try:
-                self._commit(
-                    base_version + 1, [self._meta("merge", merged), *removes, *adds]
-                )
-                return base_version + 1
+                self._commit(version, [meta, *txn_actions, *removes, *adds])
+                return version
             except ConcurrentCommitError:
                 for a in adds:
                     os.remove(os.path.join(self.path, a["add"]["name"]))
@@ -1299,7 +1351,7 @@ class TransactionLogTable:
 
     def compact(
         self,
-        max_file_bytes: int = 128 * 1024 * 1024,
+        max_file_bytes: int = TARGET_FILE_BYTES,
         max_retries: int = 5,
         zorder_by: Sequence[str] = (),
     ) -> int | None:

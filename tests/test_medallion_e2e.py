@@ -7,13 +7,16 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from end_to_end_data_lakehouse_pipeline_spark import jobs
 from end_to_end_data_lakehouse_pipeline_spark.sources import (
     LakehouseTable,
     parse_cdc_envelope,
 )
+from end_to_end_data_lakehouse_pipeline_spark.sources.txnlog import TransactionLogTable
 from end_to_end_data_lakehouse_pipeline_spark.streaming import process_cdc_stream
 
 PAYLOAD = T.StructType(
@@ -100,8 +103,8 @@ def test_runnable_medallion_job(spark, tmp_path):
 
 
 def test_medallion_acid_silver_gold(spark, tmp_path):
-    """run_silver/run_gold with acid=True (the default): the silver MERGE
-    and gold overwrite go through the transaction log — version history
+    """run_silver/run_gold: the silver MERGE and gold overwrite go
+    through the transaction log — version history
     exists, a second silver run is a new commit, and time travel reaches
     the first silver state."""
     from end_to_end_data_lakehouse_pipeline_spark import jobs
@@ -142,3 +145,92 @@ def test_medallion_acid_silver_gold(spark, tmp_path):
     assert {r.order_id for r in silver.read(version=1).collect()} == {"o1", "o3"}
     got2 = {r.order_id: r.amount for r in silver.read().collect()}
     assert got2 == got
+
+
+# -- incremental silver ingest (jobs.run_silver) ---------------------------
+
+CORRUPT = '{"before": null, "after": {"order_id": "o9", "amount": '
+
+
+def _event(op, key, ts, status="created", amount=1.0):
+    image = {"order_id": key, "order_status": status, "amount": amount}
+    return json.dumps(
+        {
+            "before": image if op == "d" else None,
+            "after": None if op == "d" else image,
+            "op": op,
+            "source_ts_ms": ts,
+        }
+    )
+
+
+def _land(spark, lake, lines):
+    """One bronze batch: raw lines appended to the bronze parquet directory,
+    laid out as ``process_cdc_stream`` writes it."""
+    spark.createDataFrame([(line,) for line in lines], "_raw_value string").write.mode(
+        "append"
+    ).parquet(f"{lake}/bronze/orders/_source_table=orders")
+
+
+def _silver_state(spark, lake):
+    silver = TransactionLogTable(spark, f"{lake}/silver/orders")
+    return {r.order_id: (r.order_status, r.amount) for r in silver.read().collect()}
+
+
+def test_quarantine_gets_each_corrupt_row_once(spark, tmp_path):
+    lake = str(tmp_path / "lake")
+    _land(spark, lake, [_event("c", "o1", 1000), CORRUPT])
+    assert jobs.run_silver(spark, lake) == (1, 1)
+    _land(spark, lake, [_event("c", "o2", 2000), CORRUPT])
+    assert jobs.run_silver(spark, lake) == (2, 1)
+    quarantine = spark.read.parquet(f"{lake}/quarantine/orders")
+    assert [r.value for r in quarantine.collect()] == [CORRUPT, CORRUPT]
+
+
+def test_late_insert_after_delete_leaves_the_key_deleted(spark, tmp_path):
+    lake = str(tmp_path / "lake")
+    _land(spark, lake, [_event("c", "o1", 1000), _event("c", "o2", 1100), _event("d", "o1", 3000)])
+    assert jobs.run_silver(spark, lake) == (1, 0)
+    # redelivered from before the delete: merged alone it would bring o1 back
+    _land(spark, lake, [_event("u", "o1", 2000, "late", 5.0), _event("u", "o2", 4000, "shipped", 2.0)])
+    assert jobs.run_silver(spark, lake) == (1, 0)
+    assert _silver_state(spark, lake) == {"o2": ("shipped", 2.0)}
+    # in-order batches after it still merge
+    _land(spark, lake, [_event("c", "o3", 5000)])
+    assert jobs.run_silver(spark, lake) == (2, 0)
+    assert set(_silver_state(spark, lake)) == {"o2", "o3"}
+
+
+def test_rerun_without_new_bronze_launches_no_job(spark, tmp_path, jobs_launched):
+    lake = str(tmp_path / "lake")
+    _land(spark, lake, [_event("c", "o1", 1000), _event("c", "o2", 2000), CORRUPT])
+    assert jobs.run_silver(spark, lake) == (2, 1)
+    state = _silver_state(spark, lake)
+    out = []
+    assert jobs_launched(lambda: out.append(jobs.run_silver(spark, lake))) == []
+    assert out == [(2, 0)]
+    assert _silver_state(spark, lake) == state
+    silver = TransactionLogTable(spark, f"{lake}/silver/orders")
+    assert [h["op"] for h in silver.history()] == ["merge", "merge"]
+
+
+def test_crash_before_commit_reconsumes_the_files(spark, tmp_path, monkeypatch):
+    lake = str(tmp_path / "lake")
+    _land(spark, lake, [_event("c", "o1", 1000)])
+    jobs.run_silver(spark, lake)
+    _land(spark, lake, [_event("c", "o2", 2000), _event("u", "o1", 2100, "shipped")])
+
+    commit = TransactionLogTable._commit
+
+    def crash(self, version, actions):
+        if any("add" in a for a in actions):  # the staged MERGE output
+            raise RuntimeError("crash between staging and commit")
+        commit(self, version, actions)
+
+    with monkeypatch.context() as m:
+        m.setattr(TransactionLogTable, "_commit", crash)
+        with pytest.raises(RuntimeError, match="crash"):
+            jobs.run_silver(spark, lake)
+    assert set(_silver_state(spark, lake)) == {"o1"}
+    assert jobs.run_silver(spark, lake) == (2, 0)
+    assert _silver_state(spark, lake) == {"o1": ("shipped", 1.0), "o2": ("created", 1.0)}

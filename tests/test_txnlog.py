@@ -926,3 +926,61 @@ def test_merge_or_append_omitting_a_column_keeps_its_values(spark, tbl):
     # an overwrite still replaces the schema
     tbl.overwrite(_mk(spark, [(7, "z", 4)]))
     assert tbl.read().columns == ["k", "v", "updated_at"]
+
+
+def test_local_frames_run_no_python_worker(spark, tbl, tmp_path, monkeypatch):
+    """MERGE's (_file, _min, _max) ranges frame and an empty read are
+    Arrow-backed local scans: no PythonRDD in their lineage."""
+    from pyspark.sql import types as T
+
+    from end_to_end_data_lakehouse_pipeline_spark.sources import txnlog
+
+    built, original = [], txnlog.local_frame
+
+    def spy(*args, **kwargs):
+        built.append(original(*args, **kwargs))
+        return built[-1]
+
+    monkeypatch.setattr(txnlog, "local_frame", spy)
+    tbl.append(_mk(spark, [(1, "a", 1), (2, "b", 1)]), sort_by=["k"])
+    tbl.merge(_mk(spark, [(2, "B", 2)]), pks=["k"], order_col="updated_at")
+    ranges = [df for df in built if df.columns == ["_file", "_min", "_max"]]
+    assert len(ranges) == 1
+    empty = TransactionLogTable(spark, str(tmp_path / "empty"))
+    empty.create_empty(T.StructType([T.StructField("k", T.LongType())]))
+    for df in [*ranges, empty.read()]:
+        assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
+    assert empty.read().collect() == []
+
+
+def test_row_counts_come_from_the_log(spark, tbl, jobs_launched):
+    tbl.append(_mk(spark, [(i, "a", 1) for i in range(5)]), sort_by=["k"])
+    upd = spark.createDataFrame(
+        [(0, "x", 2, True), (9, "n", 2, False)], ["k", "v", "updated_at", "_deleted"]
+    )
+    tbl.merge(upd, pks=["k"], order_col="updated_at")
+    counts = {}
+    assert jobs_launched(lambda: counts.update(n=tbl.num_rows(), v1=tbl.num_rows(1))) == []
+    assert counts == {"n": 5, "v1": 5} and tbl.read().count() == 5
+    # a log written before the footer counts were recorded reads the footers
+    for v in tbl._log_versions():
+        path = tbl._log_path(v)
+        with open(path) as f:
+            actions = [json.loads(line) for line in f]
+        for a in actions:
+            a.get("add", {}).pop("num_rows", None)
+        with open(path, "w") as f:
+            f.write("".join(json.dumps(a) + "\n" for a in actions))
+    assert (tbl.num_rows(), tbl.num_rows(1)) == (5, 5)
+
+
+def test_read_changes_builds_without_a_job(spark, tbl, jobs_launched):
+    """Both sides of the change feed read with their version's log schema:
+    building the frame infers no footer."""
+    tbl.append(_mk(spark, [(1, "a", 1), (2, "b", 1)]), sort_by=["k"])
+    v1 = tbl.latest_version()
+    tbl.merge(_mk(spark, [(2, "B", 2)]), pks=["k"], order_col="updated_at")
+    frames = {}
+    assert jobs_launched(lambda: frames.update(c=tbl.read_changes(v1, pks=["k"]))) == []
+    got = sorted((r.k, r.v, r._change_type) for r in frames["c"].collect())
+    assert got == [(2, "B", "update_postimage"), (2, "b", "update_preimage")]
