@@ -179,7 +179,7 @@ HEAVY = [
     "streaming_watermark_dedup_drain",  # ST4 echo-drop through the state store
     "streaming_checkpoint_resume_drain",  # ST2 two-run resume, exactly-once sink
     "streaming_fanout_drain",  # S2 per-topic independent bronze queries
-    "overwrite_publish_scan",  # S6 staging-swap gold publish, cleanup-checked
+    "overwrite_publish_scan",  # S6 gold publish as one atomic log overwrite, cleanup-checked
 ]
 
 # Median-of-N per query damps single-JVM jitter (GC pauses showed 5-10x

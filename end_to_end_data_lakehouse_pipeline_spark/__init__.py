@@ -9,9 +9,10 @@ materialized-view query corpus), re-expressed Spark-first:
   join selection, AQE re-planning.
 - Structured Streaming for the ingest path (file/rate sources locally; the
   Kafka source is the same API with different options).
-- Parquet-based lakehouse tables locally (``sources.lakehouse`` /
-  ``sources.versioned`` document the swap-to-Delta path for production;
-  this container has no delta-spark).
+- One ACID table format locally, a Delta-style transaction log over
+  parquet (``sources.txnlog``), for silver, gold and every upsert or
+  overwrite; bronze is an append-only parquet directory
+  (``sources.lakehouse``). This container has no delta-spark.
 - Beyond the reference surface: large-scale training-data operators
   (dedup exact/MinHash-LSH/SimHash/n-gram-Jaccard, embedding similarity
   search, text analysis, multimodal column plumbing), all designed to

@@ -45,9 +45,9 @@ def sql_morton2(x: str, y: str, bits: int = ZORDER_BITS) -> str:
 def zorder_cluster(df, a: str, b: str, n_files: int | None = None):
     """Range-partition + sort ``df`` by the Morton interleave of two key
     columns (each masked to ZORDER_BITS), optionally pinning the output
-    partition count. The shared write-time clustering step behind
-    LakehouseTable.overwrite(zorder_by=...) and the txnlog's Z-ordered
-    staging — per-file min/max stats then prune on EITHER key."""
+    partition count. The write-time clustering step behind the txnlog's
+    ``zorder_by`` (append and compact) — per-file min/max stats then
+    prune on EITHER key."""
     mask = (1 << ZORDER_BITS) - 1
     code = morton2(
         F.col(a).cast("long").bitwiseAND(F.lit(mask)),

@@ -34,6 +34,7 @@ from pyspark.sql import types as T
 
 from .sources import parse_cdc_envelope
 from .sources.cdc import split_corrupt_cdc
+from .sources.lakehouse import LakehouseTable
 from .sources.txnlog import ConcurrentCommitError, TransactionLogTable
 from .streaming.bronze import process_cdc_stream
 from .streaming.generator import synthetic_cdc_stream
@@ -73,25 +74,8 @@ def _silver(spark: SparkSession, lake: str) -> TransactionLogTable:
     return TransactionLogTable(spark, f"{lake}/silver/orders", stats_cols=("order_id",))
 
 
-def _parquet_files(root: str) -> list[str]:
-    """Data files under ``root`` as sorted relative paths, skipping what
-    Spark's reader hides: names starting with ``.`` or ``_``, except
-    ``key=value`` partition directories."""
-    out = []
-    for d, dirs, names in os.walk(root):
-        dirs[:] = sorted(n for n in dirs if not n.startswith(".") and (n[0] != "_" or "=" in n))
-        rel = os.path.relpath(d, root)
-        out += [
-            os.path.normpath(os.path.join(rel, n))
-            for n in sorted(names)
-            if n.endswith(".parquet") and not n.startswith(("_", "."))
-        ]
-    return out
-
-
-def _read_bronze(spark: SparkSession, root: str, files: list[str]) -> DataFrame:
-    paths = [os.path.join(root, f) for f in files]
-    return spark.read.schema(BRONZE_SCHEMA).parquet(*paths).select(F.col("_raw_value").alias("value"))
+def _bronze_values(bronze: LakehouseTable, files: list[str]) -> DataFrame:
+    return bronze.read(files, BRONZE_SCHEMA).select(F.col("_raw_value").alias("value"))
 
 
 def _quarantine(bad: DataFrame, path: str) -> int:
@@ -136,20 +120,20 @@ def run_silver(spark: SparkSession, lake: str) -> tuple[int, int]:
       decides.
     - Only the new files' corrupt rows go to the quarantine.
     """
-    root = f"{lake}/bronze/orders"
+    bronze = LakehouseTable(spark, f"{lake}/bronze/orders")
     silver = _silver(spark, lake)
     consumed = {
         app[len(CONSUMED):]: mark
         for app, mark in silver.txn_versions().items()
         if app.startswith(CONSUMED)
     }
-    files = _parquet_files(root)
+    files = bronze.files()
     new = [f for f in files if f not in consumed]
     if not new and silver.latest_version() is None:
-        raise FileNotFoundError(f"no bronze files under {root}")
+        raise FileNotFoundError(f"no bronze files under {bronze.path}")
     updates, n_bad, mark = None, 0, max(consumed.values(), default=NO_EVENT)
     if new:
-        ok, bad = split_corrupt_cdc(_read_bronze(spark, root, new), ORDER_PAYLOAD)
+        ok, bad = split_corrupt_cdc(_bronze_values(bronze, new), ORDER_PAYLOAD)
         n_bad = _quarantine(bad, f"{lake}/quarantine/orders")
         updates = parse_cdc_envelope(ok, ORDER_PAYLOAD)
         ts = F.unix_millis(F.col("_event_ts"))
@@ -159,7 +143,7 @@ def run_silver(spark: SparkSession, lake: str) -> tuple[int, int]:
             F.count(F.lit(1)), F.min(ts), F.max(ts), F.count_if(F.col("_event_ts").isNull())
         ).first()
         if untimed or (lo is not None and lo <= mark):
-            ok_all, _ = split_corrupt_cdc(_read_bronze(spark, root, files), ORDER_PAYLOAD)
+            ok_all, _ = split_corrupt_cdc(_bronze_values(bronze, files), ORDER_PAYLOAD)
             updates = parse_cdc_envelope(ok_all, ORDER_PAYLOAD)
         elif n == 0 and silver.latest_version() is not None:
             updates = None  # nothing parseable: record the files, merge nothing
@@ -171,7 +155,7 @@ def run_silver(spark: SparkSession, lake: str) -> tuple[int, int]:
         txns={CONSUMED + f: mark for f in new},
     )
     if version is None:
-        raise ConcurrentCommitError(f"another writer consumed bronze files of {root}")
+        raise ConcurrentCommitError(f"another writer consumed bronze files of {bronze.path}")
     return silver.num_rows(), n_bad
 
 

@@ -1601,7 +1601,7 @@ register(
 
 # ---------------------------------------------------------------------------
 # Z-order codes — the multi-dimensional clustering key used by the
-# lakehouse write path (sources/lakehouse.py overwrite(zorder_by=...),
+# lakehouse write path (sources/txnlog.py append(zorder_by=...),
 # functions/zorder.py). Registered so the interleave arithmetic itself is
 # oracle-verified bit-for-bit.
 # ---------------------------------------------------------------------------

@@ -1121,9 +1121,8 @@ register(
 # run PER MICRO-BATCH through the file-level ACID merge (S7/W1,
 # batch_silver.py:107-159 — TransactionLogTable.merge rewrites only the
 # files whose pk range intersects the batch's keys, the DeltaTable.merge
-# cost profile; VERDICT r7 task 1 replaced the O(table) LakehouseTable
-# full rewrite here) -> gold daily aggregate (A3, batch_gold.py). The
-# oracle recomputes latest-state-per-key + the daily rollup directly from
+# cost profile) -> gold daily aggregate (A3, batch_gold.py). The oracle
+# recomputes latest-state-per-key + the daily rollup directly from
 # `events`, so every seam of the composition (envelope round-trip, bronze
 # metadata, cross-batch LWW ordering incl. same-ms tie-breaks, delete
 # filtering, exact cents sums) is value-checked at data scale — the
@@ -1238,8 +1237,8 @@ def medallion_e2e_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mirroring the reference's per-run silver MERGE of new bronze rows
     # (batch_silver.py:146-159): each merge rewrites only the files whose
     # user_id stats range contains an update key, so per-batch cost is
-    # bounded by touched files, never table size (the 100 TB shape —
-    # tools/medallion_rehearsal.py measures the rewrite fraction at 100x).
+    # bounded by touched files, never table size (the 100 TB shape;
+    # test_txnlog's test_merge_rewrites_only_touched_files pins it).
     # Batches are split on order_key ranges, which is exactly the order
     # the bronze drain delivered them in (_stage_stream_files range-
     # partitions the wire files on ts), so per-key events cross merge
@@ -1546,11 +1545,11 @@ register(
 # overwrite_publish_scan — S6's atomic overwrite publish driven as a
 # registered query (round 9; previously pytest-only): the gold
 # full-refresh pattern — publish a PARTIAL aggregate (the stale serving
-# copy), then publish the full refresh OVER it via the staging-dir
-# rename swap, and read the table back. Leftover files from the first
-# publish would duplicate rows and break the value compare, so the
-# compare itself checks the overwrite's cleanup contract; the
-# crash-window atomicity tests stay in pytest (test_lakehouse).
+# copy), then publish the full refresh OVER it as one transaction-log
+# overwrite commit, and read the table back. A first-publish file left
+# live would duplicate rows and break the value compare, so the compare
+# itself checks that the commit removes the old snapshot; the atomicity
+# tests stay in pytest (test_txnlog).
 # ---------------------------------------------------------------------------
 
 OVERWRITE_PUBLISH_ORACLE = """
@@ -1566,10 +1565,12 @@ GROUP BY 1, 2
 
 def overwrite_publish_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import table as _table
-    from ..sources.lakehouse import LakehouseTable
+    from ..sources.txnlog import TransactionLogTable
 
     ws = session_dir("ow_publish")
-    serving = LakehouseTable(spark, os.path.join(ws, "daily_gold"))
+    serving = TransactionLogTable(
+        spark, os.path.join(ws, "daily_gold"), partition_by=("status",)
+    )
 
     def gold(df: DataFrame) -> DataFrame:
         return df.groupBy(
@@ -1583,13 +1584,10 @@ def overwrite_publish_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     orders = _table(spark, sf_dir, "orders")
-    serving.overwrite(  # stale partial publish (yesterday's run)
-        gold(orders.filter(F.col("o_orderkey") % 2 == 0)),
-        partition_by=("status",),
-    )
-    serving.overwrite(  # full refresh replaces it wholesale
-        gold(orders), partition_by=("status",), sort_within_by=("order_day",)
-    )
+    # stale partial publish (yesterday's run)
+    serving.overwrite(gold(orders.filter(F.col("o_orderkey") % 2 == 0)))
+    # full refresh replaces it wholesale
+    serving.overwrite(gold(orders), sort_by=("order_day",))
     return serving.read()
 
 
@@ -1597,8 +1595,8 @@ register(
     "overwrite_publish_scan",
     oracle=OVERWRITE_PUBLISH_ORACLE,
     doc="S6 atomic overwrite publish end-to-end: a stale partial gold "
-    "copy replaced wholesale by the full refresh (staging-dir rename "
-    "swap, partitioned by status); any leftover first-publish file "
-    "would duplicate rows and break the compare.",
+    "copy replaced wholesale by the full refresh (one transaction-log "
+    "overwrite commit, partitioned by status); any first-publish file "
+    "left live would duplicate rows and break the compare.",
     tags=("lakehouse", "gold", "agg"),
 )(overwrite_publish_scan)

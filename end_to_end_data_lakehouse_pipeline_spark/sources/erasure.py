@@ -1,11 +1,11 @@
 """Subject-erasure propagation (GDPR "right to be forgotten").
 
 Given a set of subject keys, rewrite every table that carries the key so
-no row for those subjects survives — atomically per table via
-:class:`VersionedTable` commits, so a crash mid-erasure leaves each table
-either fully erased or untouched at its previous version, and an audit
-record (per-table before/after counts) is returned for the compliance
-trail.
+no row for those subjects survives — atomically per table via one
+:class:`~.txnlog.TransactionLogTable` overwrite commit, so a crash
+mid-erasure leaves each table either fully erased or untouched at its
+previous version, and an audit record (per-table before/after counts,
+read from the log) is returned for the compliance trail.
 
 Spark shape: one broadcast LEFT ANTI join per table — the erase set is
 always tiny relative to the table, so the rewrite is a single scan with
@@ -26,7 +26,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .versioned import VersionedTable
+from .txnlog import TransactionLogTable
 
 
 @dataclass
@@ -44,33 +44,32 @@ class ErasureRecord:
 
 def erase_subjects(
     spark: SparkSession,
-    tables: dict[str, tuple[VersionedTable, str]],
+    tables: dict[str, tuple[TransactionLogTable, str]],
     subject_keys: DataFrame,
 ) -> list[ErasureRecord]:
     """Erase all rows whose key appears in ``subject_keys`` (one column).
 
-    ``tables`` maps a logical name to (VersionedTable, key_column). Each
-    table gets a new committed version containing only surviving rows;
-    time travel to pre-erasure versions remains possible until the
-    retention prune drops them (run VersionedTable pruning after the
-    legal hold expires to make erasure physical).
+    ``tables`` maps a logical name to (TransactionLogTable, key_column).
+    Each table gets a new committed version containing only surviving
+    rows; ``read(version=...)`` still reaches the pre-erasure versions
+    until ``vacuum`` drops their files (run it once the legal hold
+    expires to make erasure physical).
     """
     key_col = subject_keys.columns[0]
     keys = F.broadcast(subject_keys.select(key_col).distinct())
     audit: list[ErasureRecord] = []
-    for name, (vt, column) in tables.items():
-        df = vt.read()
-        before = df.count()
-        survivors = df.join(
+    for name, (t, column) in tables.items():
+        before = t.num_rows()
+        survivors = t.read().join(
             keys.withColumnRenamed(key_col, column), column, "left_anti"
         )
-        version = vt.commit(survivors)
+        version = t.overwrite(survivors)
         audit.append(
             ErasureRecord(
                 table=name,
                 key_column=column,
                 rows_before=before,
-                rows_after=vt.read().count(),
+                rows_after=t.num_rows(version),
                 version=version,
             )
         )

@@ -1,113 +1,25 @@
-"""Lakehouse write path: bronze append, silver MERGE, gold overwrite.
+"""Bronze: the append-only plain-parquet directory (S4).
 
-Reference semantics reproduced Spark-first:
+The reference appends raw Delta per topic with mergeSchema
+(streaming_bronze.py:95-110). Here bronze is a plain parquet directory,
+partitioned by source table, that only ever grows: every write that
+replaces or upserts rows (silver MERGE, gold overwrite, erasure) goes
+through :class:`~.txnlog.TransactionLogTable` instead. Silver tracks
+which bronze files it has merged in its own log, so bronze needs no log
+of its own.
 
-- S4 bronze append: partitioned parquet append (streaming_bronze.py:95-110
-  appends Delta with mergeSchema; parquet append is the container-local
-  stand-in — this environment has no delta-spark. In production swap the
-  format string for "delta"; the API is identical).
-- S6 gold overwrite: full-refresh ``mode("overwrite")``
-  (batch_gold.py:157).
-- S7 silver MERGE upsert (batch_silver.py:146-159): with Delta this is
-  ``DeltaTable.merge().whenMatchedUpdateAll().whenNotMatchedInsertAll()``.
-  Without a transactional format, the same end state is the relational
-  identity: union(current, updates) -> last-write-wins window dedup by PK
-  -> drop deletes -> atomic swap. That rewrite is also how Delta MERGE
-  behaves when every file is touched; at 100 TB the Delta path rewrites
-  only matched files, which is why the docstring insists on Delta in
-  production.
-- W1/P5 last-write-wins + delete filtering (batch_silver.py:107-115).
-
-Atomicity on a plain filesystem: write to ``<path>/_staging_vN`` then
-``rename`` over the live dir — readers see old or new data, never a
-partial mix, though the two-rename swap has a brief not-found window
-(see ``overwrite``; ``VersionedTable`` closes it via pointer files).
+:class:`LakehouseTable` owns the format: how a batch is appended, which
+files a reader sees, and how a chosen set of them is read back.
+``write_bucketed`` is the catalog-table writer for co-located joins.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
-
-
-def _lww_window(pks: Sequence[str], order_col: str, tiebreak: Sequence[str]):
-    order = [F.col(order_col).desc()] + [F.col(c).desc() for c in tiebreak]
-    return Window.partitionBy(*pks).orderBy(*order)
-
-
-def latest_per_key(
-    df: DataFrame, pks: Sequence[str], order_col: str, tiebreak: Sequence[str] = ()
-) -> DataFrame:
-    """W1: keep the latest row per PK (batch_silver.py:107-112), with an
-    explicit total order — the reference's bare timestamp sort is
-    non-deterministic on ties (SURVEY.md §4 'quirks to not copy')."""
-    w = _lww_window(pks, order_col, tiebreak)
-    return (
-        df.withColumn("_row_num", F.row_number().over(w))
-        .filter(F.col("_row_num") == 1)
-        .drop("_row_num")
-    )
-
-
-def merge_upsert(
-    current: DataFrame | None,
-    updates: DataFrame,
-    pks: Sequence[str],
-    order_col: str,
-    deleted_col: str = "_deleted",
-    tiebreak: Sequence[str] = (),
-) -> DataFrame:
-    """S7 MERGE as a pure DataFrame transform: last write per PK wins
-    across current+updates; rows whose final image is a delete drop out
-    (P5, batch_silver.py:115). ``current`` rows sort below any update with
-    the same order_col value (updates carry fresher lineage).
-
-    Determinism contract: two rows in the SAME batch with equal
-    (pk, order_col) need ``tiebreak`` columns (appended after _src_rank) to
-    pick a total-order winner; without them the winner among exact
-    duplicates-by-(pk, order_col, src) is row_number-arbitrary. Pass e.g.
-    an ingest offset or payload hash when the source can emit such ties.
-
-    Built from a handful of projections: every DataFrame step costs a
-    driver-side analysis pass, which dominates a small MERGE."""
-    upd_types = {f.name: f.dataType for f in updates.schema.fields}
-    if current is None:
-        out_cols = list(upd_types)
-        unioned = updates.select("*", F.lit(1).alias("_src_rank"))
-    else:
-        # schema evolution (Delta mergeSchema semantics, round 9): the
-        # merged schema is the UNION of both sides — a column only the
-        # updates carry back-fills NULL on stored rows, a column the
-        # updates dropped keeps its stored values and NULL-fills update
-        # rows. Types come from whichever side has the column. A stored
-        # table written before any delete arrived has no soft-delete
-        # column; its rows are by definition live.
-        cur_types = {f.name: f.dataType for f in current.schema.fields}
-        out_cols = list(upd_types) + [c for c in cur_types if c not in upd_types]
-        types = {**cur_types, **upd_types}
-
-        def aligned(df: DataFrame, have: dict, rank: int) -> DataFrame:
-            fill = {deleted_col: F.lit(False)} if rank == 0 else {}
-            return df.select(
-                *[
-                    c if c in have else fill.get(c, F.lit(None)).cast(types[c]).alias(c)
-                    for c in out_cols
-                ],
-                F.lit(rank).alias("_src_rank"),
-            )
-
-        unioned = aligned(current, cur_types, 0).unionByName(aligned(updates, upd_types, 1))
-    w = _lww_window(pks, order_col, ["_src_rank", *tiebreak])
-    keep = F.col("_row_num") == 1
-    if deleted_col in out_cols:
-        keep = keep & ~F.coalesce(F.col(deleted_col), F.lit(False))
-    ranked = unioned.select("*", F.row_number().over(w).alias("_row_num"))
-    return ranked.filter(keep).select(*out_cols)
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def write_bucketed(
@@ -135,310 +47,43 @@ def write_bucketed(
 
 
 class LakehouseTable:
-    """One path-addressed table with append / overwrite / merge writers."""
+    """Append-only plain-parquet directory: the bronze format."""
 
-    def __init__(self, spark: SparkSession, path: str, fmt: str = "parquet"):
+    def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        self.fmt = fmt
 
-    def exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            not n.startswith(("_staging", ".")) for n in os.listdir(self.path)
-        )
-
-    def read(self, merge_schema: bool = False) -> DataFrame:
-        """``merge_schema=True`` unions column sets across files written
-        at different schema versions (the reference's mergeSchema=true
-        bronze semantics, streaming_bronze.py:101 — schema evolution on
-        append)."""
-        r = self.spark.read.format(self.fmt)
-        if merge_schema:
-            r = r.option("mergeSchema", "true")
-        return r.load(self.path)
-
-    def append(
-        self,
-        df: DataFrame,
-        partition_by: Sequence[str] = (),
-        sort_within_by: Sequence[str] = (),
-    ) -> None:
+    def append(self, df: DataFrame, partition_by: Sequence[str] = ()) -> None:
         """S4 bronze append (streaming_bronze.py:99-103); partitioned by
-        e.g. the source-table or date column so downstream reads prune.
-        ``sort_within_by`` clusters rows inside each file (the ClickHouse
-        ORDER BY / Delta Z-order analog, O4: 03_fact_tables.sql:54) so
-        min/max page stats make point lookups skip row groups."""
-        if sort_within_by:
-            df = df.sortWithinPartitions(*sort_within_by)
-        w = df.write.format(self.fmt).mode("append")
+        e.g. the source-table or date column so downstream reads prune."""
+        w = df.write.mode("append")
         if partition_by:
             w = w.partitionBy(*partition_by)
-        w.save(self.path)
+        w.parquet(self.path)
 
-    def overwrite(
-        self,
-        df: DataFrame,
-        partition_by: Sequence[str] = (),
-        sort_within_by: Sequence[str] = (),
-        zorder_by: Sequence[str] = (),
-        zorder_files: int | None = None,
-    ) -> None:
-        """S6 gold full refresh via staging dir + rename swap.
+    def files(self) -> list[str]:
+        """Data files as sorted paths relative to the table root, skipping
+        what Spark's reader hides: names starting with ``.`` or ``_``,
+        except ``key=value`` partition directories."""
+        out = []
+        for d, dirs, names in os.walk(self.path):
+            dirs[:] = sorted(n for n in dirs if not n.startswith(".") and (n[0] != "_" or "=" in n))
+            rel = os.path.relpath(d, self.path)
+            out += [
+                os.path.normpath(os.path.join(rel, n))
+                for n in sorted(names)
+                if n.endswith(".parquet") and not n.startswith(("_", "."))
+            ]
+        return out
 
-        ``zorder_by=(a, b)`` range-partitions and clusters rows by the
-        Morton interleave of the two keys (functions/zorder.py — the
-        Delta ``OPTIMIZE ZORDER BY`` analog), so min/max file stats prune
-        lookups on EITHER key, not just the leading sort key.
-        ``zorder_files`` pins the output file count (sized so each file is
-        ~128 MB-1 GB at scale); left None, AQE picks — and may coalesce
-        tiny tables to one file, which defeats stats pruning.
-
-        The swap is two os.rename calls, not one atomic commit: a reader
-        (or crash) between them sees a brief table-not-found window — the
-        honest limit of plain-filesystem cutover. ``vacuum()`` recovers the
-        table from the surviving complete copy after such a crash;
-        ``VersionedTable`` (pointer-file indirection) gives genuinely
-        atomic cutover when that window is unacceptable."""
-        staging = f"{self.path}_staging_{uuid.uuid4().hex[:8]}"
-        if zorder_by:
-            from ..functions.zorder import zorder_cluster
-
-            df = zorder_cluster(df, *zorder_by, n_files=zorder_files)
-        if sort_within_by:
-            df = df.sortWithinPartitions(*sort_within_by)
-        w = df.write.format(self.fmt).mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.save(staging)
-        if os.path.isdir(self.path):
-            old = f"{self.path}_old_{uuid.uuid4().hex[:8]}"
-            os.rename(self.path, old)
-            os.rename(staging, self.path)
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            os.rename(staging, self.path)
-
-    def _siblings(self, kind: str) -> list[str]:
-        parent = os.path.dirname(self.path) or "."
-        base = os.path.basename(self.path)
-        return [
-            os.path.join(parent, name)
-            for name in os.listdir(parent)
-            if name.startswith(f"{base}_{kind}_")
-        ]
-
-    def recover(self) -> str | None:
-        """If a crash between overwrite()'s two renames left no live dir,
-        restore it from the surviving complete copy: the newest staging
-        (the write finished before the first rename happened, so staging
-        is complete and is the INTENDED new state), else the newest _old_
-        (the previous state). Returns the dir promoted, or None if the
-        live dir already exists."""
-        if os.path.isdir(self.path):
-            return None
-        candidates = sorted(self._siblings("staging"), key=os.path.getmtime)
-        if not candidates:
-            candidates = sorted(self._siblings("old"), key=os.path.getmtime)
-        if not candidates:
-            raise FileNotFoundError(
-                f"{self.path}: no live dir and no staging/old copy to recover from"
-            )
-        chosen = candidates[-1]
-        os.rename(chosen, self.path)
-        return chosen
-
-    def vacuum(self) -> int:
-        """Remove crash leftovers: a killed overwrite() can strand
-        ``<path>_staging_*`` / ``<path>_old_*`` siblings. Returns the
-        number of directories removed (Delta VACUUM analog for this
-        layout).
-
-        Safety: if the live dir is MISSING, those siblings are the only
-        complete copies of the table — vacuum first recovers the live dir
-        (see ``recover``) and only then prunes, so it can never delete the
-        last copy."""
-        if not os.path.isdir(self.path):
-            self.recover()
-        removed = 0
-        for d in self._siblings("staging") + self._siblings("old"):
-            shutil.rmtree(d, ignore_errors=True)
-            removed += 1
-        return removed
-
-    def compact(self, target_partitions: int, sort_within_by: Sequence[str] = ()) -> int:
-        """OPTIMIZE analog: rewrite the table into ``target_partitions``
-        files (coalescing the small files that streaming appends
-        accumulate — the #1 operational issue of high-frequency triggers
-        at scale). Returns the file count before compaction."""
-        before = sum(
-            1 for _, _, files in os.walk(self.path) for f in files if f.endswith(".parquet")
-        )
-        df = self.read().coalesce(target_partitions)
-        self.overwrite(df, sort_within_by=sort_within_by)
-        return before
-
-    def merge(
-        self,
-        updates: DataFrame,
-        pks: Sequence[str],
-        order_col: str,
-        deleted_col: str = "_deleted",
-    ) -> None:
-        """S7 MERGE upsert; first write degrades to overwrite exactly as
-        the reference's fallback does (batch_silver.py:162-164), minus the
-        bare ``except`` that hides real errors.
-
-        This is the FULL-TABLE rewrite shape — correct at any size but
-        O(table) per merge. For the file-level behavior the reference
-        gets from ``DeltaTable.merge`` (batch_silver.py:146-159, rewrite
-        only files containing matched keys), use ``BucketedMergeTable``,
-        which rewrites only the PK-hash partitions the updates touch."""
-        current = self.read() if self.exists() else None
-        merged = merge_upsert(current, updates, pks, order_col, deleted_col)
-        # Plan reads the live dir it is about to replace -> materialize
-        # into staging first (overwrite() already stages + swaps).
-        self.overwrite(merged)
-
-
-BUCKET_COL = "_pk_bucket"
-
-
-class BucketedMergeTable:
-    """File-level MERGE on plain parquet: the Delta ``DeltaTable.merge``
-    cost profile (batch_silver.py:146-159 rewrites only files containing
-    matched keys) reproduced with PK-hash partitioning.
-
-    Layout: parquet partitioned by ``_pk_bucket = pmod(xxhash64(*pks),
-    n_buckets)`` — a stable, uniform key derived from the PK, so every
-    row's partition never changes across upserts. MERGE then:
-
-    1. computes the touched bucket set from the updates (≤ n_buckets
-       values — driver-side list, bounded by configuration, the S12
-       scalar-fetch shape);
-    2. reads ONLY those partitions of the current table (partition
-       pruning on the bucket column — O(touched), not O(table));
-    3. applies the relational MERGE identity (``merge_upsert``:
-       last-write-wins by (pk, order_col), delete-image filtering);
-    4. writes back with dynamic partition overwrite, so untouched
-       partitions' files are never rewritten (byte-identical after the
-       merge — the property the test asserts).
-
-    At 100 TB with n_buckets=4096 a merge touching 1% of keys rewrites
-    ~1% of the table instead of 100%. Size n_buckets so one bucket's
-    rows fit an executor comfortably (table_bytes / n_buckets ≈ 256 MB-
-    1 GB). Crash-model note: dynamic partition overwrite commits per
-    partition directory (Spark's FileOutputCommitter), so a mid-merge
-    crash can leave a prefix of touched partitions new and the rest old
-    — re-running the same merge converges (last-write-wins is
-    idempotent); readers between crash and retry see a torn-but-valid
-    snapshot per partition. Delta/Iceberg close exactly that window with
-    a transaction log; delta-spark is not installable in this sandbox
-    (VERDICT r2 'What's missing' #1).
-    """
-
-    def __init__(
-        self, spark: SparkSession, path: str, n_buckets: int = 64
-    ):
-        self.spark = spark
-        self.path = path
-        self.n_buckets = n_buckets
-
-    def exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            n.startswith(f"{BUCKET_COL}=") for n in os.listdir(self.path)
-        )
-
-    def _bucket(self, pks: Sequence[str]):
-        # Hash CANONICALIZED (string-cast) pk values: xxhash64 is
-        # dtype-sensitive (xxhash64(int32 5) != xxhash64(int64 5)), so
-        # hashing raw columns would assign the same logical key to
-        # different buckets when an updates frame arrives with a narrower
-        # integer width than the stored table — the merge would then miss
-        # the existing row and silently duplicate the key. String-cast
-        # normalizes width; the bucket column is part of the table layout,
-        # so this canonicalization is the format contract.
-        return F.pmod(
-            F.xxhash64(*[F.col(k).cast("string") for k in pks]),
-            F.lit(self.n_buckets),
-        ).cast("int")
-
-    def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path).drop(BUCKET_COL)
-
-    def _read_buckets(self, buckets: Sequence[int]) -> DataFrame:
-        # partition pruning: the filter on the partition column prunes
-        # directory listings before any file read
-        return self.spark.read.parquet(self.path).filter(
-            F.col(BUCKET_COL).isin(list(buckets))
-        )
-
-    def write_full(self, df: DataFrame, pks: Sequence[str]) -> None:
-        (
-            df.withColumn(BUCKET_COL, self._bucket(pks))
-            .repartition(self.n_buckets, BUCKET_COL)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(self.path)
-        )
-
-    def merge(
-        self,
-        updates: DataFrame,
-        pks: Sequence[str],
-        order_col: str,
-        deleted_col: str = "_deleted",
-    ) -> None:
-        if not self.exists():
-            self.write_full(
-                merge_upsert(None, updates, pks, order_col, deleted_col), pks
-            )
-            return
-        upd = updates.withColumn(BUCKET_COL, self._bucket(pks))
-        touched = [
-            r[BUCKET_COL]
-            for r in upd.select(BUCKET_COL).distinct().collect()
-        ]
-        if not touched:
-            return
-        current = self._read_buckets(touched)
-        merged = merge_upsert(
-            current,
-            upd,
-            pks,
-            order_col,
-            deleted_col,
-        ).cache()
-        try:
-            # Dynamic overwrite only replaces partitions PRESENT in the
-            # output: a touched bucket whose rows were ALL deleted would
-            # keep its old files and resurrect the deleted rows. Track
-            # surviving buckets and drop the emptied dirs explicitly.
-            surviving = {
-                r[BUCKET_COL]
-                for r in merged.select(BUCKET_COL).distinct().collect()
-            }
-            if surviving:
-                (
-                    merged.repartition(len(surviving), BUCKET_COL)
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy(BUCKET_COL)
-                    .parquet(self.path)
-                )
-            for b in set(touched) - surviving:
-                shutil.rmtree(
-                    os.path.join(self.path, f"{BUCKET_COL}={b}"),
-                    ignore_errors=True,
-                )
-            if not any(
-                n.startswith(f"{BUCKET_COL}=") for n in os.listdir(self.path)
-            ):
-                # the merge emptied the whole table: a dir with no parquet
-                # files loses the schema (read() would fail) — write the
-                # empty frame statically (SPARK-23271 keeps a metadata-only
-                # file); the partition layout is rebuilt on the next merge.
-                merged.drop(BUCKET_COL).write.mode("overwrite").parquet(
-                    self.path
-                )
-        finally:
-            merged.unpersist()
+    def read(self, files: Sequence[str] | None = None, schema: StructType | None = None) -> DataFrame:
+        """The whole table, or only ``files`` (paths relative to the root,
+        as :meth:`files` lists them). A declared ``schema`` skips footer
+        inference; files written before a column existed read it as
+        NULL."""
+        r = self.spark.read
+        if schema is not None:
+            r = r.schema(schema)
+        if files is None:
+            return r.parquet(self.path)
+        return r.parquet(*[os.path.join(self.path, f) for f in files])

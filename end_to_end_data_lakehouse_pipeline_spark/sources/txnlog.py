@@ -1,12 +1,12 @@
 """Transaction-log table: Delta-protocol-style ACID commits on parquet.
 
-VERDICT r2 "What's missing" #1: the reference is Delta end-to-end
-(streaming_bronze.py:101 ``mergeSchema`` append, batch_silver.py:146-159
-``DeltaTable.merge``), and ``delta-spark`` is not installable in this
-sandbox. ``LakehouseTable`` reproduces the *semantics* with dir swaps and
-``BucketedMergeTable`` gets the file-level MERGE *cost profile*, but both
-concede a non-atomic window in their docstrings. This module closes that
-window the way Delta itself does — with a transaction log:
+The reference is Delta end-to-end (streaming_bronze.py:101
+``mergeSchema`` append, batch_silver.py:146-159 ``DeltaTable.merge``),
+and ``delta-spark`` is not a dependency of this engine. This is the
+engine's one table format for every write that replaces or upserts rows
+(silver MERGE, gold overwrite, erasure); only the append-only bronze
+directory stays plain parquet (``lakehouse.LakehouseTable``). It is
+atomic the way Delta itself is — with a transaction log:
 
 - **Immutable data files + an append-only log.** Data files land under
   the table root with unique names and are NEVER mutated; each commit is
@@ -58,12 +58,10 @@ from collections.abc import Iterable, Sequence
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructField, StructType
-
-from .lakehouse import merge_upsert
 
 LOG_DIR = "_txn_log"
 # compact()'s output file size, also the unit a MERGE rewrite is sized in
@@ -283,6 +281,70 @@ def _file_stats(md: pq.FileMetaData, cols: Sequence[str]) -> dict:
                 mn, mx = str(mn), str(mx)
             out[col] = {"min": mn, "max": mx, "nulls": nulls}
     return out
+
+
+def _lww_window(pks: Sequence[str], order_col: str, tiebreak: Sequence[str]):
+    order = [F.col(order_col).desc()] + [F.col(c).desc() for c in tiebreak]
+    return Window.partitionBy(*pks).orderBy(*order)
+
+
+def merge_upsert(
+    current: DataFrame | None,
+    updates: DataFrame,
+    pks: Sequence[str],
+    order_col: str,
+    deleted_col: str = "_deleted",
+    tiebreak: Sequence[str] = (),
+) -> DataFrame:
+    """S7 MERGE as a pure DataFrame transform: last write per PK wins
+    across current+updates; rows whose final image is a delete drop out
+    (P5, batch_silver.py:115). ``current`` rows sort below any update with
+    the same order_col value (updates carry fresher lineage).
+    :meth:`TransactionLogTable.merge` applies it to the touched files.
+
+    Determinism contract: two rows in the SAME batch with equal
+    (pk, order_col) need ``tiebreak`` columns (appended after _src_rank) to
+    pick a total-order winner; without them the winner among exact
+    duplicates-by-(pk, order_col, src) is row_number-arbitrary (the
+    reference's bare timestamp sort, SURVEY.md §4 'quirks to not copy').
+    Pass e.g. an ingest offset or payload hash when the source can emit
+    such ties.
+
+    Built from a handful of projections: every DataFrame step costs a
+    driver-side analysis pass, which dominates a small MERGE."""
+    upd_types = {f.name: f.dataType for f in updates.schema.fields}
+    if current is None:
+        out_cols = list(upd_types)
+        unioned = updates.select("*", F.lit(1).alias("_src_rank"))
+    else:
+        # schema evolution (Delta mergeSchema semantics, round 9): the
+        # merged schema is the UNION of both sides — a column only the
+        # updates carry back-fills NULL on stored rows, a column the
+        # updates dropped keeps its stored values and NULL-fills update
+        # rows. Types come from whichever side has the column. A stored
+        # table written before any delete arrived has no soft-delete
+        # column; its rows are by definition live.
+        cur_types = {f.name: f.dataType for f in current.schema.fields}
+        out_cols = list(upd_types) + [c for c in cur_types if c not in upd_types]
+        types = {**cur_types, **upd_types}
+
+        def aligned(df: DataFrame, have: dict, rank: int) -> DataFrame:
+            fill = {deleted_col: F.lit(False)} if rank == 0 else {}
+            return df.select(
+                *[
+                    c if c in have else fill.get(c, F.lit(None)).cast(types[c]).alias(c)
+                    for c in out_cols
+                ],
+                F.lit(rank).alias("_src_rank"),
+            )
+
+        unioned = aligned(current, cur_types, 0).unionByName(aligned(updates, upd_types, 1))
+    w = _lww_window(pks, order_col, ["_src_rank", *tiebreak])
+    keep = F.col("_row_num") == 1
+    if deleted_col in out_cols:
+        keep = keep & ~F.coalesce(F.col(deleted_col), F.lit(False))
+    ranked = unioned.select("*", F.row_number().over(w).alias("_row_num"))
+    return ranked.filter(keep).select(*out_cols)
 
 
 class TransactionLogTable:
@@ -685,8 +747,7 @@ class TransactionLogTable:
     ) -> int:
         """Full refresh as one atomic commit: remove every live file, add
         the new ones. Readers see the old or the new snapshot, never a
-        mix — the window LakehouseTable.overwrite's two-rename swap left
-        open is gone."""
+        mix."""
         adds = self._stage_files(df, sort_by, n_files)
         while True:
             version = (self.latest_version() or 0) + 1

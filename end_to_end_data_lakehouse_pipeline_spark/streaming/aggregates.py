@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from ..sources.lakehouse import LakehouseTable
+from ..sources.txnlog import TransactionLogTable
 
 
 def streaming_daily_sales(
@@ -183,16 +183,17 @@ def streaming_orders_with_payments(
 
 def silver_merge_sink(
     stream: DataFrame,
-    table: LakehouseTable,
+    table: TransactionLogTable,
     pks: Sequence[str],
     order_col: str,
     checkpoint_path: str,
     available_now: bool = True,
 ) -> StreamingQuery:
     """ST6+S7: streaming silver via foreachBatch MERGE — each micro-batch
-    upserts into the lakehouse table (the Delta foreachBatch-MERGE pattern;
-    idempotent per batch because MERGE is last-write-wins on the same
-    order_col, so checkpoint replays converge to the same table state)."""
+    is one file-level MERGE commit on the transaction log (the Delta
+    foreachBatch-MERGE pattern; idempotent per batch because MERGE is
+    last-write-wins on the same order_col, so checkpoint replays converge
+    to the same table state)."""
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.isEmpty():

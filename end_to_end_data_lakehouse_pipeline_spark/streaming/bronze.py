@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..sources.lakehouse import LakehouseTable
+
 DEFAULT_TRIGGER = "5 seconds"  # streaming_bronze.py:109
 
 
@@ -69,15 +71,11 @@ def process_cdc_stream(
     checkpoint. ``available_now=True`` drains the source then stops
     (hermetic tests); otherwise the processing-time trigger is used."""
     projected = bronze_projection(stream, source_table)
+    bronze = LakehouseTable(stream.sparkSession, bronze_path)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.isEmpty():  # empty-batch skip, streaming_bronze.py:96-97
-            (
-                batch_df.write.format("parquet")  # "delta" in production
-                .mode("append")
-                .partitionBy("_source_table")
-                .save(bronze_path)
-            )
+            bronze.append(batch_df, partition_by=("_source_table",))
 
     writer = projected.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_path

@@ -12,8 +12,8 @@ foreachBatch sink that keeps a *versioned* dimension current:
    partial recompute, O(touched keys), never O(dimension);
 4. the dimension table (parquet partitioned by PK-hash bucket) replaces
    just the touched buckets via dynamic partition overwrite — untouched
-   buckets' files are never rewritten (the BucketedMergeTable cost
-   profile).
+   buckets' files are never rewritten, so a batch's cost follows the
+   keys it touches, not the dimension's size.
 
 Recompute-from-bronze (rather than interval-patching) makes the final
 dimension a pure function of the bronze contents: any batch split, any
@@ -90,8 +90,10 @@ class Scd2DimensionSink:
         self._batches_since_compact = 0
 
     def _bucket(self):
-        # canonicalized (string-cast) hash — same contract as
-        # BucketedMergeTable._bucket: dtype-width-insensitive bucketing
+        # hash the string-cast key: xxhash64 is dtype-sensitive
+        # (xxhash64(int 5) != xxhash64(bigint 5)), so a batch whose key
+        # arrives at a narrower integer width than the stored rows would
+        # land in another bucket and duplicate the key
         return F.pmod(
             F.xxhash64(F.col(self.key).cast("string")), F.lit(self.n_buckets)
         ).cast("int")

@@ -12,10 +12,10 @@ from pyspark.sql import types as T
 
 from end_to_end_data_lakehouse_pipeline_spark.sources import (
     LakehouseTable,
+    TransactionLogTable,
     merge_upsert,
     parse_cdc_envelope,
 )
-from end_to_end_data_lakehouse_pipeline_spark.sources.lakehouse import latest_per_key
 
 PAYLOAD = T.StructType(
     [
@@ -66,7 +66,7 @@ def test_merge_upsert_last_write_wins_and_delete(cdc_raw):
 
 
 def test_merge_into_existing_table(spark, tmp_path):
-    t = LakehouseTable(spark, str(tmp_path / "silver_orders"))
+    t = TransactionLogTable(spark, str(tmp_path / "silver_orders"))
     base = spark.createDataFrame(
         [("o1", "created", 10.0, False, 1)], ["order_id", "order_status", "amount", "_deleted", "v"]
     )
@@ -83,36 +83,12 @@ def test_merge_into_existing_table(spark, tmp_path):
     assert {r.order_id: r.order_status for r in t.read().collect()} == rows
 
 
-def test_append_partitioned_and_overwrite_swap(spark, tmp_path):
+def test_append_partitioned(spark, tmp_path):
     t = LakehouseTable(spark, str(tmp_path / "bronze"))
     df = spark.createDataFrame([(1, "orders"), (2, "items")], ["id", "_source_table"])
     t.append(df, partition_by=["_source_table"])
     t.append(df, partition_by=["_source_table"])
     assert t.read().count() == 4
-    t.overwrite(df)
-    assert t.read().count() == 2
-
-
-def test_latest_per_key_deterministic_tiebreak(spark):
-    df = spark.createDataFrame(
-        [("k", 1, "a"), ("k", 1, "b")], ["pk", "ts", "payload"]
-    )
-    win = latest_per_key(df, ["pk"], "ts", tiebreak=["payload"])
-    assert win.first().payload == "b"  # explicit total order, not arbitrary
-
-
-def test_sorted_write_clusters_rows(spark, tmp_path):
-    t = LakehouseTable(spark, str(tmp_path / "sorted"))
-    df = spark.range(1000).selectExpr("id", "id % 7 AS grp").repartition(2)
-    t.append(df, sort_within_by=["grp", "id"])
-    # rows inside each parquet file must be clustered by (grp, id)
-    import glob
-
-    files = glob.glob(str(tmp_path / "sorted" / "*.parquet"))
-    assert files
-    for f in files:
-        rows = [(r.grp, r.id) for r in spark.read.parquet(f).collect()]
-        assert rows == sorted(rows)
 
 
 def test_jdbc_writer_shape(spark):
@@ -122,19 +98,6 @@ def test_jdbc_writer_shape(spark):
     w = jdbc_writer(df, "jdbc:clickhouse://warehouse:8123/db", "t", num_partitions=4)
     # writer is configured, not executed (no warehouse in the container)
     assert w is not None
-
-
-def test_compact_coalesces_small_files(spark, tmp_path):
-    t = LakehouseTable(spark, str(tmp_path / "many_files"))
-    for i in range(5):  # five appends -> many small files
-        t.append(spark.range(100).selectExpr("id", f"id + {i} AS v").repartition(4))
-    before = t.compact(target_partitions=2)
-    assert before >= 10
-    import glob
-
-    after = len(glob.glob(str(tmp_path / "many_files" / "*.parquet")))
-    assert after <= 2
-    assert t.read().count() == 500  # no rows lost
 
 
 def test_split_corrupt_cdc_dead_letter(spark):
@@ -158,7 +121,11 @@ def test_schema_evolution_on_append(spark, tmp_path):
     t = LakehouseTable(spark, str(tmp_path / "evolving"))
     t.append(spark.createDataFrame([(1, "a")], ["id", "v1"]))
     t.append(spark.createDataFrame([(2, "b", 9.5)], ["id", "v1", "v2_new"]))
-    merged = t.read(merge_schema=True)
+    merged = t.read(schema=T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("v1", T.StringType()),
+        T.StructField("v2_new", T.DoubleType()),
+    ]))
     assert set(merged.columns) == {"id", "v1", "v2_new"}
     rows = {r.id: r.v2_new for r in merged.collect()}
     assert rows == {1: None, 2: 9.5}  # old rows null-fill the new column
@@ -178,99 +145,9 @@ def test_partition_pruning_reaches_scan(spark, tmp_path):
     assert q.count() == 100
 
 
-def test_versioned_table_time_travel_and_rollback(spark, tmp_path):
-    from end_to_end_data_lakehouse_pipeline_spark.sources.versioned import VersionedTable
-
-    t = VersionedTable(spark, str(tmp_path / "vt"), keep_versions=10)
-    v1 = t.commit(spark.createDataFrame([(1, "a")], ["id", "v"]))
-    v2 = t.commit(spark.createDataFrame([(1, "a"), (2, "b")], ["id", "v"]))
-    assert (v1, v2) == (1, 2)
-    assert t.read().count() == 2
-    assert t.read_version(1).count() == 1  # time travel
-    t.rollback(1)
-    assert t.read().count() == 1
-    assert [h["version"] for h in t.history()] == [1, 2]
-
-
-def test_versioned_table_prunes_old_versions(spark, tmp_path):
-    from end_to_end_data_lakehouse_pipeline_spark.sources.versioned import VersionedTable
-
-    t = VersionedTable(spark, str(tmp_path / "vt2"), keep_versions=2)
-    for i in range(5):
-        t.commit(spark.range(i + 1))
-    assert t.read().count() == 5
-    retained = sorted(
-        int(n[2:]) for n in __import__("os").listdir(str(tmp_path / "vt2")) if n.startswith("v_")
-    )
-    assert retained == [4, 5]
-    import pytest as _pytest
-
-    with _pytest.raises(FileNotFoundError):
-        t.read_version(1)
-
-
-def test_vacuum_removes_crash_leftovers(spark, tmp_path):
-    import os
-
-    t = LakehouseTable(spark, str(tmp_path / "vtab"))
-    t.overwrite(spark.range(10))
-    # simulate a crashed overwrite: stranded staging + old dirs
-    os.makedirs(str(tmp_path / "vtab_staging_dead1"))
-    os.makedirs(str(tmp_path / "vtab_old_dead2"))
-    assert t.vacuum() == 2
-    assert t.read().count() == 10  # live data untouched
-    assert t.vacuum() == 0
-
-
-def test_vacuum_recovers_when_live_dir_missing(spark, tmp_path):
-    # Crash window between overwrite()'s two renames: live dir gone, the
-    # completed staging dir holds the intended new state. vacuum must
-    # recover it, never delete the last copy (ADVICE r1).
-    import os, time
-
-    t = LakehouseTable(spark, str(tmp_path / "crash"))
-    t.overwrite(spark.range(5))
-    old = str(tmp_path / "crash_old_sim1")
-    os.rename(t.path, old)  # simulate: live renamed away, new never arrived
-    time.sleep(0.05)
-    staging = str(tmp_path / "crash_staging_sim2")
-    spark.range(9).write.parquet(staging)  # the completed new state
-    assert t.vacuum() >= 1
-    assert t.read().count() == 9  # staging (newest complete copy) promoted
-    assert t.vacuum() == 0
-
-
-def test_vacuum_refuses_with_nothing_to_recover(spark, tmp_path):
-    import pytest as _pytest
-
-    t = LakehouseTable(spark, str(tmp_path / "ghost"))
-    with _pytest.raises(FileNotFoundError):
-        t.vacuum()
-
-
-def test_commit_after_rollback_appends_new_version(spark, tmp_path):
-    # Delta/Iceberg RESTORE semantics: commit after rollback(v) must create
-    # max(existing)+1, not overwrite v+1 in place (ADVICE r1).
-    from end_to_end_data_lakehouse_pipeline_spark.sources.versioned import VersionedTable
-
-    t = VersionedTable(spark, str(tmp_path / "vt3"), keep_versions=10)
-    t.commit(spark.range(1))
-    t.commit(spark.range(2))
-    t.commit(spark.range(3))
-    t.rollback(1)
-    v4 = t.commit(spark.range(4))
-    assert v4 == 4  # not 2
-    assert t.read_version(2).count() == 2  # v2 untouched
-    assert t.read_version(3).count() == 3  # v3 untouched
-    assert [h["version"] for h in t.history()] == [1, 2, 3, 4]
-    assert t.read().count() == 4
-
-
 def test_merge_upsert_tiebreak_column(spark):
     # Same (pk, order_col) twice in one batch: tiebreak picks the winner
     # deterministically.
-    from end_to_end_data_lakehouse_pipeline_spark.sources.lakehouse import merge_upsert
-
     updates = spark.createDataFrame(
         [(1, 10, 5, "first"), (1, 10, 9, "second")], ["id", "ts", "offset", "v"]
     )
@@ -322,49 +199,18 @@ def test_morton2_interleaves_bits(spark):
     ]
 
 
-def test_zorder_write_prunes_on_both_keys(spark, tmp_path):
-    """Z-ordered files must have narrow min/max on BOTH dimensions, so a
-    point lookup on either key touches a strict subset of files."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    n = 64
-    grid = spark.range(n * n).selectExpr(f"id % {n} AS x", f"id DIV {n} AS y", "id AS payload")
-    t = LakehouseTable(spark, str(tmp_path / "z"))
-    # 16 files => ~4x4 z-curve quadrants; enough per-dim granularity that
-    # range-boundary sampling jitter can't push a point lookup past half
-    # the files (at 8 files a lookup legitimately hits 4-5 of 8).
-    t.overwrite(grid.repartition(8), zorder_by=("x", "y"), zorder_files=16)
-
-    files = glob.glob(str(tmp_path / "z" / "*.parquet"))
-    assert len(files) >= 8  # enough files for pruning to mean anything
-    spans = []
-    for f in files:
-        md = pq.read_table(f, columns=["x", "y"])
-        xs, ys = md.column("x").to_pylist(), md.column("y").to_pylist()
-        spans.append(((min(xs), max(xs)), (min(ys), max(ys))))
-    for dim in (0, 1):
-        # an off-boundary point lookup must skip at least half the files
-        # (a plain (x, y) lexicographic sort leaves every file spanning the
-        # FULL y domain, so any y lookup would hit all of them)
-        hit = sum(1 for s in spans if s[dim][0] <= 8 <= s[dim][1])
-        assert hit <= len(files) // 2, (dim, spans)
-
-
 def test_erasure_propagates_across_tables_atomically(spark, tmp_path):
     # GDPR erasure: removing two subjects rewrites every table that carries
     # the key, as new versions (time travel to pre-erasure still works
     # until pruned), and returns a faithful audit trail.
     from end_to_end_data_lakehouse_pipeline_spark.sources.erasure import erase_subjects
-    from end_to_end_data_lakehouse_pipeline_spark.sources.versioned import VersionedTable
 
-    customers = VersionedTable(spark, str(tmp_path / "customers"), keep_versions=10)
-    orders = VersionedTable(spark, str(tmp_path / "orders"), keep_versions=10)
-    customers.commit(
+    customers = TransactionLogTable(spark, str(tmp_path / "customers"))
+    orders = TransactionLogTable(spark, str(tmp_path / "orders"))
+    customers.overwrite(
         spark.createDataFrame([(1, "ann"), (2, "bob"), (3, "cas")], ["cust_id", "name"])
     )
-    orders.commit(
+    orders.overwrite(
         spark.createDataFrame(
             [(10, 1), (11, 1), (12, 2), (13, 3)], ["order_id", "cust_id"]
         )
@@ -383,7 +229,7 @@ def test_erasure_propagates_across_tables_atomically(spark, tmp_path):
     assert [r.cust_id for r in customers.read().collect()] == [3]
     assert sorted(r.order_id for r in orders.read().collect()) == [13]
     # pre-erasure versions still readable (legal-hold window), then prunable
-    assert customers.read_version(1).count() == 3
+    assert customers.read(version=1).count() == 3
 
 
 def test_orc_roundtrip_preserves_rows_and_schema(spark, sf_dir, tmp_path):

@@ -65,20 +65,20 @@ def test_medallion_bronze_silver_gold(spark, tmp_path):
     parsed = parse_cdc_envelope(
         bronze.select(F.col("_raw_value").alias("value")), PAYLOAD
     )
-    silver = LakehouseTable(spark, str(tmp_path / "silver"))
+    silver = TransactionLogTable(spark, str(tmp_path / "silver"))
     silver.merge(parsed, pks=["order_id"], order_col="_event_ts")
     rows = {r.order_id: r for r in silver.read().collect()}
     assert set(rows) == {"o1", "o3"}
     assert rows["o1"].order_status == "delivered" and rows["o1"].amount == 15.0
 
     # --- gold: daily aggregate over silver ---
-    gold = LakehouseTable(spark, str(tmp_path / "gold_daily"))
+    gold = TransactionLogTable(spark, str(tmp_path / "gold_daily"), partition_by=("d",))
     daily = (
         silver.read()
         .groupBy(F.col("order_date").cast("date").alias("d"))
         .agg(F.count(F.lit(1)).alias("n_orders"), F.sum("amount").alias("revenue"))
     )
-    gold.overwrite(daily, partition_by=["d"])
+    gold.overwrite(daily)
     got = {str(r.d): (r.n_orders, r.revenue) for r in gold.read().collect()}
     assert got == {"2024-01-01": (1, 15.0), "2024-01-02": (1, 7.0)}
 
@@ -167,9 +167,10 @@ def _event(op, key, ts, status="created", amount=1.0):
 def _land(spark, lake, lines):
     """One bronze batch: raw lines appended to the bronze parquet directory,
     laid out as ``process_cdc_stream`` writes it."""
-    spark.createDataFrame([(line,) for line in lines], "_raw_value string").write.mode(
-        "append"
-    ).parquet(f"{lake}/bronze/orders/_source_table=orders")
+    batch = spark.createDataFrame(
+        [(line, "orders") for line in lines], "_raw_value string, _source_table string"
+    )
+    LakehouseTable(spark, f"{lake}/bronze/orders").append(batch, partition_by=("_source_table",))
 
 
 def _silver_state(spark, lake):
@@ -234,3 +235,20 @@ def test_crash_before_commit_reconsumes_the_files(spark, tmp_path, monkeypatch):
     assert set(_silver_state(spark, lake)) == {"o1"}
     assert jobs.run_silver(spark, lake) == (2, 0)
     assert _silver_state(spark, lake) == {"o1": ("shipped", 1.0), "o2": ("created", 1.0)}
+
+
+def test_run_silver_reads_bronze_through_lakehouse_table(spark, tmp_path, monkeypatch):
+    # LakehouseTable owns the bronze format, so a tracer that wraps its
+    # read sees every bronze read of the silver ingest
+    lake = str(tmp_path / "lake")
+    _land(spark, lake, [_event("c", "o1", 1000)])
+    calls = []
+    read = LakehouseTable.read
+
+    def counted(self, *args, **kwargs):
+        calls.append(self.path)
+        return read(self, *args, **kwargs)
+
+    monkeypatch.setattr(LakehouseTable, "read", counted)
+    assert jobs.run_silver(spark, lake) == (1, 0)
+    assert calls and set(calls) == {f"{lake}/bronze/orders"}

@@ -7,7 +7,7 @@ table state iff its order key is >= the current row's (updates beat
 current on ties); a winning delete removes the row physically (the
 reference's silver semantics, batch_silver.py:107-115 — note this means a
 stale update arriving AFTER the delete's batch resurrects the key; Delta
-CDF tombstones are the production fix, documented in sources/lakehouse).
+CDF tombstones are the production fix).
 """
 
 from __future__ import annotations
@@ -15,7 +15,7 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from end_to_end_data_lakehouse_pipeline_spark.sources.lakehouse import merge_upsert
+from end_to_end_data_lakehouse_pipeline_spark.sources.txnlog import merge_upsert
 
 KEYS = ["k1", "k2", "k3"]
 
@@ -72,138 +72,6 @@ def test_batchwise_merge_equals_fold_model(spark, events, split):
 
 
 # ---------------------------------------------------------------------------
-# BucketedMergeTable: file-level MERGE — only touched PK-hash partitions
-# are rewritten (the DeltaTable.merge cost profile on plain parquet).
-# ---------------------------------------------------------------------------
-
-
-def _partition_fingerprint(path):
-    """{partition_dir: {filename: md5}} for every _pk_bucket=* dir."""
-    import hashlib
-    import os
-
-    out = {}
-    for d in os.listdir(path):
-        if not d.startswith("_pk_bucket="):
-            continue
-        files = {}
-        pdir = os.path.join(path, d)
-        for fn in os.listdir(pdir):
-            if fn.endswith(".parquet"):
-                with open(os.path.join(pdir, fn), "rb") as f:
-                    files[fn] = hashlib.md5(f.read()).hexdigest()
-        out[d] = files
-    return out
-
-
-def test_bucketed_merge_rewrites_only_touched_partitions(spark, tmp_path):
-    from end_to_end_data_lakehouse_pipeline_spark.sources.lakehouse import (
-        BucketedMergeTable,
-    )
-
-    path = str(tmp_path / "silver_orders")
-    t = BucketedMergeTable(spark, path, n_buckets=8)
-    base = spark.range(0, 400).selectExpr(
-        "id AS pk", "CAST(id % 7 AS STRING) AS status", "0L AS ver",
-        "CAST(false AS BOOLEAN) AS _deleted",
-    )
-    t.write_full(base, pks=["pk"])
-    before = _partition_fingerprint(path)
-    assert len(before) == 8  # all buckets populated
-
-    # updates touch 3 specific keys -> at most 3 buckets
-    upd = spark.createDataFrame(
-        [(5, "UPDATED", 1, False), (6, "UPDATED", 1, False), (401, "NEW", 1, False)],
-        "pk LONG, status STRING, ver LONG, _deleted BOOLEAN",
-    )
-    t.merge(upd, pks=["pk"], order_col="ver")
-    after = _partition_fingerprint(path)
-
-    # expected touched set via the table's OWN bucket function (the
-    # canonicalized hash), so the test can't drift from the layout
-    touched = {
-        f"_pk_bucket={r[0]}"
-        for r in upd.select(t._bucket(["pk"])).distinct().collect()
-    }
-    untouched = set(before) - touched
-    assert untouched, "test needs at least one untouched bucket"
-    for d in untouched:  # byte-identical: same filenames, same md5s
-        assert after[d] == before[d], f"untouched partition {d} was rewritten"
-    for d in touched:
-        assert after[d] != before[d]
-
-    rows = {r.pk: r.status for r in t.read().collect()}
-    assert rows[5] == "UPDATED" and rows[6] == "UPDATED" and rows[401] == "NEW"
-    assert rows[7] == "0" and len(rows) == 401
-
-
-def test_bucketed_merge_delete_semantics_and_emptied_bucket(spark, tmp_path):
-    from end_to_end_data_lakehouse_pipeline_spark.sources.lakehouse import (
-        BucketedMergeTable,
-    )
-
-    path = str(tmp_path / "silver_small")
-    t = BucketedMergeTable(spark, path, n_buckets=4)
-    base = spark.createDataFrame(
-        [(1, "a", 0, False), (2, "b", 0, False)],
-        "pk LONG, status STRING, ver LONG, _deleted BOOLEAN",
-    )
-    t.write_full(base, pks=["pk"])
-
-    # delete BOTH rows: any bucket emptied by the merge must not keep its
-    # old files (dynamic overwrite alone would resurrect the rows)
-    dels = spark.createDataFrame(
-        [(1, "a", 1, True), (2, "b", 1, True)],
-        "pk LONG, status STRING, ver LONG, _deleted BOOLEAN",
-    )
-    t.merge(dels, pks=["pk"], order_col="ver")
-    assert t.read().count() == 0
-
-    # re-insert after delete works (and merge is idempotent on replay)
-    ins = spark.createDataFrame(
-        [(1, "z", 2, False)], "pk LONG, status STRING, ver LONG, _deleted BOOLEAN"
-    )
-    t.merge(ins, pks=["pk"], order_col="ver")
-    t.merge(ins, pks=["pk"], order_col="ver")  # replay converges
-    rows = [(r.pk, r.status) for r in t.read().collect()]
-    assert rows == [(1, "z")]
-
-
-def test_bucketed_merge_pk_dtype_width_mismatch(spark, tmp_path):
-    """xxhash64 is dtype-sensitive: without pk canonicalization, an
-    updates frame whose pk arrives as INT while the stored table used
-    LONG lands in a different bucket and silently duplicates the key."""
-    from pyspark.sql import functions as F
-
-    from end_to_end_data_lakehouse_pipeline_spark.sources.lakehouse import (
-        BucketedMergeTable,
-    )
-
-    path = str(tmp_path / "dtype_tbl")
-    t = BucketedMergeTable(spark, path, n_buckets=16)
-    base = spark.range(0, 50).select(
-        F.col("id").cast("long").alias("pk"),
-        F.lit("old").alias("v"),
-        F.lit(0).alias("ver"),
-        F.lit(False).alias("_deleted"),
-    )
-    t.write_full(base, ["pk"])
-    updates = spark.range(0, 50, 5).select(
-        F.col("id").cast("int").alias("pk"),  # narrower width on purpose
-        F.lit("new").alias("v"),
-        F.lit(1).alias("ver"),
-        F.lit(False).alias("_deleted"),
-    )
-    t.merge(updates, ["pk"], "ver")
-    out = t.read()
-    assert out.count() == 50  # no duplicated keys
-    assert out.filter(F.col("v") == "new").count() == 10
-    assert (
-        out.groupBy("pk").count().filter(F.col("count") > 1).count() == 0
-    )
-
-
-# ---------------------------------------------------------------------------
 # TransactionLogTable.merge: the same fold model must hold through the
 # ACID path — file staging, stats-based candidate selection, log commit.
 # Any divergence (a candidate file the range-join missed, a stale file
@@ -253,9 +121,7 @@ def test_merge_upsert_schema_evolution_both_directions(spark):
     update rows."""
     from pyspark.sql import functions as F
 
-    from end_to_end_data_lakehouse_pipeline_spark.sources.lakehouse import (
-        merge_upsert,
-    )
+    from end_to_end_data_lakehouse_pipeline_spark.sources.txnlog import merge_upsert
 
     current = spark.createDataFrame(
         [(1, "a", 10, "keepme"), (2, "b", 10, "old2")],

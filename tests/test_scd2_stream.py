@@ -8,8 +8,7 @@ path; these tests cover what that can't see:
   batch carries out-of-order history for shared users) must converge to
   exactly the batch SCD2 result;
 - an incremental update must leave untouched buckets' files
-  byte-identical (the BucketedMergeTable cost profile, here on the
-  streaming path).
+  byte-identical (a batch rewrites only the buckets its keys hash to).
 """
 
 from __future__ import annotations

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from end_to_end_data_lakehouse_pipeline_spark.sources import LakehouseTable, parse_cdc_envelope
+from end_to_end_data_lakehouse_pipeline_spark.sources import TransactionLogTable, parse_cdc_envelope
 from end_to_end_data_lakehouse_pipeline_spark.streaming import (
     process_cdc_stream,
     streaming_daily_sales,
@@ -128,7 +128,7 @@ def test_silver_merge_sink_foreachbatch(spark, tmp_path):
     raw.write.parquet(str(src))
     stream = spark.readStream.schema(raw.schema).parquet(str(src))
     parsed = parse_cdc_envelope(stream, PAYLOAD)
-    table = LakehouseTable(spark, str(tmp_path / "silver"))
+    table = TransactionLogTable(spark, str(tmp_path / "silver"))
     q = silver_merge_sink(
         parsed, table, pks=["order_id"], order_col="_event_ts",
         checkpoint_path=str(tmp_path / "ckpt"),

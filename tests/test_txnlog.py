@@ -159,6 +159,35 @@ def test_merge_applies_deletes_and_late_events(spark, tbl):
     assert got == {1: "a", 3: "c"}
 
 
+def test_merge_pk_width_mismatch_and_full_delete_reinsert(spark, tbl):
+    # an INT-keyed update batch matches the LONG keys it updates: no key
+    # is duplicated and the stored type stays LONG
+    tbl.overwrite(spark.range(0, 50).selectExpr("id AS k", "'old' AS v", "0 AS updated_at"))
+    tbl.merge(
+        spark.range(0, 50, 5).selectExpr("CAST(id AS INT) AS k", "'new' AS v", "1 AS updated_at"),
+        pks=["k"],
+        order_col="updated_at",
+    )
+    out = tbl.read()
+    assert dict(out.dtypes)["k"] == "bigint"
+    assert out.count() == 50 and out.filter(F.col("v") == "new").count() == 10
+    assert out.groupBy("k").count().filter(F.col("count") > 1).count() == 0
+    # a merge that deletes every key empties the table but keeps its schema
+    tbl.merge(
+        spark.range(0, 50).selectExpr("id AS k", "'x' AS v", "2 AS updated_at", "true AS _deleted"),
+        pks=["k"],
+        order_col="updated_at",
+    )
+    emptied = tbl.read()
+    assert emptied.count() == 0
+    assert set(emptied.columns) == {"k", "v", "updated_at"}
+    # a re-insert after the delete lands, and replaying it converges
+    ins = _mk(spark, [(1, "z", 3)])
+    tbl.merge(ins, pks=["k"], order_col="updated_at")
+    tbl.merge(ins, pks=["k"], order_col="updated_at")
+    assert [(r["k"], r["v"]) for r in tbl.read().collect()] == [(1, "z")]
+
+
 def test_read_pruned_skips_files_and_matches_full_scan(spark, tbl):
     tbl.append(_mk(spark, [(i, "x", 1) for i in range(0, 100)]), sort_by=["k"])
     tbl.append(_mk(spark, [(i, "x", 1) for i in range(1000, 1100)]), sort_by=["k"])
