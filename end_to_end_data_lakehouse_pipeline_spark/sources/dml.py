@@ -50,14 +50,13 @@ inside merge conditions).
 
 from __future__ import annotations
 
-import os
 import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .txnlog import ConcurrentCommitError, TransactionLogTable, local_frame
+from .txnlog import TransactionLogTable, local_frame
 
 _MERGE_RE = re.compile(
     r"^\s*MERGE\s+INTO\s+(?P<target>\w+)(?:\s+(?:AS\s+)?(?P<talias>\w+))?"
@@ -273,7 +272,6 @@ def _exec_merge(
     sql: str,
     tables: dict[str, TransactionLogTable],
     sources: dict[str, DataFrame],
-    max_retries: int = 5,
 ) -> int:
     sql, subquery = _extract_using_subquery(sql)
     tname, ta, sname, sa, on, keys, matched_cls, not_matched_cls = _parse_merge(sql)
@@ -290,21 +288,13 @@ def _exec_merge(
     def q(alias: str, col: str) -> F.Column:
         return F.col(f"{alias}.{col}")
 
-    for _ in range(max_retries):
-        base_version = t.latest_version()
+    def attempt(base_version, stage):
         if base_version is None:
             # empty target: every source row is NOT MATCHED
             inserts = _insert_rows(None, src.alias(sa), sa, not_matched_cls, None)
             if inserts is None:
                 return 0
-            adds = t._stage_files(inserts, sort_by=sort_by)
-            try:
-                t._commit(1, [t._meta("merge_sql", inserts), *adds])
-                return 1
-            except ConcurrentCommitError:
-                for a in adds:
-                    os.remove(os.path.join(t.path, a["add"]["name"]))
-                continue
+            return [t._meta("merge_sql", inserts), *stage(inserts, sort_by=sort_by)]
         if keys:
             touched = t.files_touched_by_keys(
                 src.select(F.col(skey).alias(tkey)), tkey, base_version
@@ -392,20 +382,11 @@ def _exec_merge(
         out = pieces[0]
         for p in pieces[1:]:
             out = out.unionByName(p)
-        adds = t._stage_files(out, sort_by=sort_by)
+        adds = stage(out, sort_by=sort_by)
         removes = [{"remove": {"name": n}} for n in sorted(touched)]
-        try:
-            t._commit(
-                base_version + 1, [t._meta("merge_sql", out), *removes, *adds]
-            )
-            return base_version + 1
-        except ConcurrentCommitError:
-            for a in adds:
-                os.remove(os.path.join(t.path, a["add"]["name"]))
-            continue
-    raise ConcurrentCommitError(
-        f"SQL MERGE lost the commit race {max_retries} times at {t.path}"
-    )
+        return [t._meta("merge_sql", out, base_version), *removes, *adds]
+
+    return t._transact("SQL MERGE", attempt)
 
 
 def _insert_rows(

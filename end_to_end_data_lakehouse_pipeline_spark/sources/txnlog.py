@@ -14,12 +14,17 @@ atomic the way Delta itself is — with a transaction log:
   file actions. Readers reconstruct the live file set from the log, so a
   half-finished write (data files present, commit absent) is simply
   invisible — atomicity without rename games.
-- **Optimistic concurrency.** The commit file is created with
-  ``O_CREAT|O_EXCL`` — POSIX exclusive create, the same primitive Delta
-  uses on HDFS/ABFS (and emulates with a coordination service on S3).
-  Two writers racing for version N: exactly one wins; the loser re-reads
-  the log and retries against the new snapshot (blind appends/overwrites
-  retry trivially; MERGE re-executes so it sees the winner's rows).
+- **Optimistic concurrency.** A commit is written in full to a temp
+  file and published with ``os.link``, which fails if the version
+  already exists — the put-if-absent primitive Delta uses on HDFS/ABFS
+  (and emulates with a coordination service on S3). Two writers racing
+  for version N: exactly one wins. Every committing write runs through
+  one loop, ``TransactionLogTable._transact``: pin the base version,
+  build the actions against it, commit base+1, and after a lost race
+  rebuild against the winner's snapshot (appends and overwrites reuse
+  their staged files after re-checking the winner's CHECK constraints;
+  MERGE, UPDATE, DELETE and OPTIMIZE re-execute). It gives up after
+  ``COMMIT_ATTEMPTS`` lost races.
 - **Snapshot isolation + time travel.** ``read(version=...)`` replays the
   log to that version (DESCRIBE HISTORY ↔ ``history()``, RESTORE ↔
   ``restore()``).
@@ -66,6 +71,8 @@ from pyspark.sql.types import StructField, StructType
 LOG_DIR = "_txn_log"
 # compact()'s output file size, also the unit a MERGE rewrite is sized in
 TARGET_FILE_BYTES = 128 * 1024 * 1024
+# lost commit races a write tolerates before it raises ConcurrentCommitError
+COMMIT_ATTEMPTS = 5
 # stats are harvested only for these physical types — min/max on
 # complex/binary columns is not useful for range pruning
 _STATABLE = ("int32", "int64", "float", "double", "string", "date32")
@@ -508,6 +515,90 @@ class TransactionLogTable:
                 )
             os.replace(tmp, self._log_path(version, checkpoint=True))
 
+    def _transact(
+        self,
+        op: str,
+        attempt,
+        txn: tuple[str, int] | None = None,
+        consumes: dict[str, int] | None = None,
+    ):
+        """The optimistic-concurrency protocol; every committing write
+        runs through it. Each attempt reads the base version, checks the
+        precondition on it, lets ``attempt(base, stage)`` build the
+        actions against that snapshot, and commits them at base+1.
+
+        ``attempt`` stages its data files through ``stage(df, keep=False,
+        **layout)`` (the :meth:`_stage_files` layout options) and returns
+        the action list, or, when there is nothing to commit, the value
+        the write returns instead (anything but a list). After a lost
+        race the files of a plain stage are deleted: they were built from
+        a stale snapshot. ``keep=True`` marks files whose content does not
+        depend on the base (append, overwrite): the next attempt's
+        ``stage`` of the same frame hands them back, once the frame has
+        passed the CHECK constraints at the new base, so a constraint the
+        winner added still rejects the write.
+
+        Preconditions, checked on each attempt's base (a True answer
+        returns None, commits nothing and deletes what was staged):
+        ``txn=(app_id, batch_id)`` is the Delta ``txn`` watermark — a
+        batch id at or below the app's recorded one was already applied;
+        ``consumes={app: version}`` holds when any of the apps is already
+        recorded. Either way the apps ride in the commit as ``txn``
+        actions. After ``COMMIT_ATTEMPTS`` lost races the write raises
+        ConcurrentCommitError."""
+        marks = dict(consumes or {})
+        if txn is not None:
+            marks[txn[0]] = txn[1]
+        staged: list[dict] = []
+        kept: dict[int, tuple[DataFrame, list[dict]]] = {}
+
+        def stage(df: DataFrame, keep: bool = False, **layout) -> list[dict]:
+            if keep and id(df) in kept:
+                return kept[id(df)][1]
+            adds = self._stage_files(df, **layout)
+            if keep:
+                kept[id(df)] = (df, adds)
+            else:
+                staged.extend(adds)
+            return adds
+
+        def discard(adds: list[dict]) -> None:
+            for a in adds:
+                os.remove(os.path.join(self.path, a["add"]["name"]))
+
+        def discard_kept() -> None:
+            discard([a for _df, adds in kept.values() for a in adds])
+
+        for _ in range(COMMIT_ATTEMPTS):
+            base = self.latest_version()
+            if marks:
+                seen = self.txn_versions(base)
+                if (txn is not None and seen.get(txn[0], -1) >= txn[1]) or (
+                    consumes and not seen.keys().isdisjoint(consumes)
+                ):
+                    discard_kept()
+                    return None
+            try:
+                for df, _adds in kept.values():
+                    self._validate(df, base)
+            except ConstraintViolation:
+                discard_kept()
+                raise
+            actions = attempt(base, stage)
+            if not isinstance(actions, list):
+                return actions
+            actions += [{"txn": {"app": a, "version": v}} for a, v in marks.items()]
+            try:
+                self._commit((base or 0) + 1, actions)
+                return (base or 0) + 1
+            except ConcurrentCommitError:
+                discard(staged)
+                staged.clear()
+        discard_kept()
+        raise ConcurrentCommitError(
+            f"{op} lost the commit race {COMMIT_ATTEMPTS} times at {self.path}"
+        )
+
     # -- write path -------------------------------------------------------
 
     def _stage_files(
@@ -597,7 +688,16 @@ class TransactionLogTable:
             shutil.rmtree(staging, ignore_errors=True)
         return adds
 
-    def _meta(self, op: str, df: DataFrame | None = None) -> dict:
+    def _meta(
+        self, op: str, df: DataFrame | None = None, base: int | None = None
+    ) -> dict:
+        """The commit's ``meta`` action. With ``df`` it records the
+        schema: ``df``'s columns, plus those of the schema at ``base``
+        (the snapshot the write builds on) that ``df`` lacks. An
+        overwrite passes no base, so it replaces the schema; any other
+        write keeps the columns it omits (Delta's contract), else the
+        declared schema would narrow and every later read and rewrite
+        would drop the values older files still store."""
         meta: dict = {"op": op, "ts": time.time()}
         if self.partition_by:
             meta["partition_by"] = list(self.partition_by)
@@ -609,16 +709,12 @@ class TransactionLogTable:
             # declared schema, and NULL-filled evolved columns on older
             # files would violate it at read time (executor NPE).
             schema = df.schema
-            base = None if op == "overwrite" else self._schema_at(None)
-            if base is not None:
-                # Only an overwrite replaces the schema. A write that omits
-                # a column keeps it (Delta's contract), else the declared
-                # schema would narrow and every later read and rewrite
-                # would drop the values older files still store.
+            stored = self._schema_at(base) if base else None
+            if stored is not None:
                 have = {f.name.lower() for f in schema.fields}
                 schema = StructType(
                     schema.fields
-                    + [f for f in base.fields if f.name.lower() not in have]
+                    + [f for f in stored.fields if f.name.lower() not in have]
                 )
             meta["schema"] = _all_nullable(schema).json()
         return {"meta": meta}
@@ -629,143 +725,58 @@ class TransactionLogTable:
         sort_by: Sequence[str] = (),
         n_files: int | None = None,
         zorder_by: Sequence[str] = (),
-    ) -> int:
-        """Blind append: stages files once, then retries only the O(1)
-        commit on version conflicts (appends never conflict logically —
-        EXCEPT against a concurrent ADD CONSTRAINT, so a lost race
-        re-validates against the winner's constraint set before
-        retrying; Delta's metadata conflict check, same outcome).
-        ``n_files`` pins the output file count — size it for ~128 MB-1 GB
-        per file; left None, AQE picks (and may coalesce small tables to
-        one file, which blunts per-file stats pruning)."""
-        adds = self._stage_files(df, sort_by, n_files, zorder_by)
-        actions = [self._meta("append", df), *adds]
-        while True:
-            version = (self.latest_version() or 0) + 1
-            try:
-                self._commit(version, actions)
-                return version
-            except ConcurrentCommitError:
-                try:
-                    self._validate(df)
-                except ConstraintViolation:
-                    for a in adds:
-                        os.remove(os.path.join(self.path, a["add"]["name"]))
-                    raise
-                continue
-
-    def append_txn(
-        self, df: DataFrame, app_id: str, batch_id: int, sort_by: Sequence[str] = ()
+        txn: tuple[str, int] | None = None,
     ) -> int | None:
-        """Idempotent append — the Delta ``txn`` action. A (app_id,
-        batch_id) pair commits AT MOST once: a redelivered micro-batch
-        (foreachBatch retry after a sink write that committed but a
-        checkpoint that didn't) sees its batch id already recorded and
-        becomes a no-op instead of duplicating rows. This is exactly how
-        delta's streaming sink gets exactly-once on top of Spark's
-        at-least-once foreachBatch contract.
+        """Blind append: stages files once and on a lost commit race
+        retries only the O(1) commit against the winner's snapshot
+        (appends never conflict logically — EXCEPT against a concurrent
+        ADD CONSTRAINT, so the staged rows are re-validated against the
+        winner's constraint set first; Delta's metadata conflict check,
+        same outcome). It raises ConcurrentCommitError after
+        ``COMMIT_ATTEMPTS`` lost races in a row. ``n_files`` pins the
+        output file count — size it for ~128 MB-1 GB per file; left
+        None, AQE picks (and may coalesce small tables to one file, which
+        blunts per-file stats pruning).
 
-        Returns the committed version, or None if this batch was already
-        applied. Atomicity of the dedup: the watermark is read AT the
-        pinned base version and the commit targets exactly base+1 — any
-        commit interleaving between the check and the create changes the
-        target version, the exclusive create fails, and the loop
-        re-checks against the new state. A check against 'latest' with a
-        separately-read version number would leave a window where two
-        deliveries of the same batch both land."""
-        base = self.latest_version()
-        if self.txn_versions(base).get(app_id, -1) >= batch_id:
-            return None
-        adds = self._stage_files(df, sort_by)
-        actions = [
-            self._meta("append", df),
-            {"txn": {"app": app_id, "version": batch_id}},
-            *adds,
-        ]
-        while True:
-            base = self.latest_version()
-            if self.txn_versions(base).get(app_id, -1) >= batch_id:
-                for a in adds:  # lost to a concurrent delivery of the SAME batch
-                    os.remove(os.path.join(self.path, a["add"]["name"]))
-                return None
-            try:
-                self._commit((base or 0) + 1, actions)
-                return (base or 0) + 1
-            except ConcurrentCommitError:
-                continue
+        ``txn=(app_id, batch_id)`` makes the append idempotent — the
+        Delta ``txn`` action. The pair commits AT MOST once: a redelivered
+        micro-batch (foreachBatch retry after a sink write that committed
+        but a checkpoint that didn't) sees its batch id already recorded
+        and becomes a no-op returning None instead of duplicating rows —
+        how Delta's streaming sink gets exactly-once on top of Spark's
+        at-least-once foreachBatch contract. The watermark is read at the
+        pinned base version and the commit targets exactly base+1, so a
+        twin delivery landing in between forces a lost race and a
+        re-check."""
 
-    def overwrite_txn(
-        self,
-        df: DataFrame,
-        app_id: str,
-        batch_id: int,
-        sort_by: Sequence[str] = (),
-    ) -> int | None:
-        """Idempotent full refresh — :meth:`overwrite` guarded by the
-        Delta ``txn`` watermark. This is the foreachBatch AGGREGATE-sink
-        pattern: each micro-batch replaces the materialized view; a
-        redelivered batch (sink committed, checkpoint didn't) sees its
-        batch id already recorded and becomes a no-op instead of
-        clobbering a newer refresh. Same pinned-version atomicity rule
-        as :meth:`append_txn`. Returns the committed version, or None
-        if this batch was already applied."""
-        base = self.latest_version()
-        if self.txn_versions(base).get(app_id, -1) >= batch_id:
-            return None
-        adds = self._stage_files(df, sort_by)
-        while True:
-            base = self.latest_version()
-            if self.txn_versions(base).get(app_id, -1) >= batch_id:
-                for a in adds:
-                    os.remove(os.path.join(self.path, a["add"]["name"]))
-                return None
-            removes = (
-                [{"remove": {"name": n}} for n in self.snapshot(base)]
-                if base
-                else []
+        def attempt(base, stage):
+            adds = stage(
+                df, keep=True, sort_by=sort_by, n_files=n_files, zorder_by=zorder_by
             )
-            actions = [
-                self._meta("overwrite", df),
-                {"txn": {"app": app_id, "version": batch_id}},
-                *removes,
-                *adds,
-            ]
-            try:
-                self._commit((base or 0) + 1, actions)
-                return (base or 0) + 1
-            except ConcurrentCommitError:
-                try:
-                    self._validate(df)  # a concurrent ADD CONSTRAINT wins
-                except ConstraintViolation:
-                    for a in adds:
-                        os.remove(os.path.join(self.path, a["add"]["name"]))
-                    raise
-                continue
+            return [self._meta("append", df, base), *adds]
+
+        return self._transact("append", attempt, txn=txn)
 
     def overwrite(
-        self, df: DataFrame, sort_by: Sequence[str] = (), n_files: int | None = None
-    ) -> int:
+        self,
+        df: DataFrame,
+        sort_by: Sequence[str] = (),
+        n_files: int | None = None,
+        txn: tuple[str, int] | None = None,
+    ) -> int | None:
         """Full refresh as one atomic commit: remove every live file, add
         the new ones. Readers see the old or the new snapshot, never a
-        mix."""
-        adds = self._stage_files(df, sort_by, n_files)
-        while True:
-            version = (self.latest_version() or 0) + 1
-            removes = [
-                {"remove": {"name": n}} for n in self.snapshot(version - 1 if version > 1 else None)
-            ] if version > 1 else []
-            actions = [self._meta("overwrite", df), *removes, *adds]
-            try:
-                self._commit(version, actions)
-                return version
-            except ConcurrentCommitError:
-                try:
-                    self._validate(df)  # a concurrent ADD CONSTRAINT wins
-                except ConstraintViolation:
-                    for a in adds:
-                        os.remove(os.path.join(self.path, a["add"]["name"]))
-                    raise
-                continue
+        mix. ``txn=(app_id, batch_id)`` guards it with the Delta ``txn``
+        watermark, as in :meth:`append` — the foreachBatch AGGREGATE-sink
+        pattern: a redelivered batch returns None instead of clobbering a
+        newer refresh."""
+
+        def attempt(base, stage):
+            adds = stage(df, keep=True, sort_by=sort_by, n_files=n_files)
+            removes = [{"remove": {"name": n}} for n in self.snapshot(base)] if base else []
+            return [self._meta("overwrite", df), *removes, *adds]
+
+        return self._transact("overwrite", attempt, txn=txn)
 
     # -- read path --------------------------------------------------------
 
@@ -800,11 +811,12 @@ class TransactionLogTable:
                 out.pop(m["constraint"]["name"], None)
         return out
 
-    def _validate(self, df: DataFrame) -> None:
-        """SQL CHECK semantics: a row violates only when the expression
-        is FALSE (NULL passes). One short-circuit probe per constraint —
+    def _validate(self, df: DataFrame, version: int | None = None) -> None:
+        """SQL CHECK semantics against the constraints at ``version``
+        (default latest): a row violates only when the expression is
+        FALSE (NULL passes). One short-circuit probe per constraint —
         zero cost on unconstrained tables."""
-        for name, expr in self.constraints().items():
+        for name, expr in self.constraints(version).items():
             # filter(~expr) keeps exactly the FALSE rows (NULL drops out)
             bad = df.filter(~F.expr(expr)).limit(1).count()
             if bad:
@@ -817,7 +829,13 @@ class TransactionLogTable:
         """Delta ``ALTER TABLE ADD CONSTRAINT`` analog: validate the
         EXISTING snapshot against the expression, then commit the
         constraint as metadata. Every subsequent write path stages
-        through :meth:`_stage_files`, which enforces it."""
+        through :meth:`_stage_files`, which enforces it.
+
+        The check runs on every attempt's base: a concurrent append that
+        wins the version race may have introduced violating rows (the
+        write side only enforces constraints already in the log), so the
+        winner's snapshot is re-checked — the mirror of write-side
+        re-validation on retry."""
         meta = {
             "meta": {
                 "op": "add_constraint",
@@ -825,27 +843,20 @@ class TransactionLogTable:
                 "constraint": {"name": name, "expr": expr},
             }
         }
-        while True:
-            # Validate INSIDE the commit loop: a concurrent append that
-            # wins the version race may have introduced violating rows
-            # (the write side only enforces constraints already in the
-            # log), so the snapshot must be re-checked after every lost
-            # race — the mirror of write-side re-validation on retry.
-            if name in self.constraints():
+
+        def attempt(base, _stage):
+            if name in self.constraints(base):
                 raise ValueError(f"constraint {name!r} already exists")
-            if self.latest_version() is not None and self.snapshot():
-                bad = self.read().filter(~F.expr(expr)).limit(1).count()
+            if base and self.snapshot(base):
+                bad = self.read(base).filter(~F.expr(expr)).limit(1).count()
                 if bad:
                     raise ConstraintViolation(
                         f"existing rows violate CHECK ({expr}); constraint "
                         f"{name!r} not added"
                     )
-            version = (self.latest_version() or 0) + 1
-            try:
-                self._commit(version, [meta])
-                return version
-            except ConcurrentCommitError:
-                continue
+            return [meta]
+
+        return self._transact("add_constraint", attempt)
 
     def create_empty(self, schema: StructType) -> int:
         """``CREATE TABLE`` with a declared schema and NO data: a
@@ -879,7 +890,7 @@ class TransactionLogTable:
             )
         return best
 
-    def restore(self, version: int, max_retries: int = 5) -> int:
+    def restore(self, version: int) -> int:
         """``RESTORE TABLE ... TO VERSION AS OF`` (Delta RESTORE
         semantics): a NEW commit whose live file set and declared schema
         equal the snapshot at ``version``. History rolls FORWARD — no log
@@ -901,8 +912,8 @@ class TransactionLogTable:
                 f"files already vacuumed (e.g. {missing[0]})"
             )
         schema = self._schema_at(version)
-        for _ in range(max_retries):
-            base = self.latest_version() or 0
+
+        def attempt(base, _stage):
             current = self.snapshot(base) if base else {}
             meta: dict = {
                 "op": "restore",
@@ -919,18 +930,11 @@ class TransactionLogTable:
             actions += [
                 {"add": e} for n, e in sorted(target.items()) if n not in current
             ]
-            try:
-                self._commit(base + 1, actions)
-                return base + 1
-            except ConcurrentCommitError:
-                continue
-        raise ConcurrentCommitError(
-            f"RESTORE lost the commit race {max_retries} times at {self.path}"
-        )
+            return actions
+
+        return self._transact("restore", attempt)
 
     def drop_constraint(self, name: str) -> int:
-        if name not in self.constraints():
-            raise ValueError(f"no constraint {name!r}")
         meta = {
             "meta": {
                 "op": "drop_constraint",
@@ -938,13 +942,13 @@ class TransactionLogTable:
                 "constraint": {"name": name},
             }
         }
-        while True:
-            version = (self.latest_version() or 0) + 1
-            try:
-                self._commit(version, [meta])
-                return version
-            except ConcurrentCommitError:
-                continue
+
+        def attempt(base, _stage):
+            if name not in self.constraints(base):
+                raise ValueError(f"no constraint {name!r}")
+            return [meta]
+
+        return self._transact("drop_constraint", attempt)
 
     def alter_add_columns(self, cols_ddl: str) -> int:
         """Metadata-only schema evolution (Delta ``ALTER TABLE ... ADD
@@ -956,14 +960,15 @@ class TransactionLogTable:
         files unchanged, so time travel to pre-ALTER versions still reads
         the old schema."""
         added = StructType.fromDDL(cols_ddl)
-        while True:
-            # Recompute the base schema INSIDE the commit loop: if a
-            # concurrent ALTER ADD COLUMNS wins the version race, the
-            # retry must build on the WINNER's schema (else this commit
-            # would be a full-replacement schema missing the winner's
-            # column — a lost update), and the duplicate-name check must
-            # run against the fresh schema too.
-            current = self._schema_at(None)
+
+        def attempt(base, _stage):
+            # The schema comes from the attempt's base: if a concurrent
+            # ALTER ADD COLUMNS wins the version race, the retry must
+            # build on the WINNER's schema (else this commit would be a
+            # full-replacement schema missing the winner's column — a
+            # lost update), and the duplicate-name check must run against
+            # the fresh schema too.
+            current = self._schema_at(base) if base else None
             if current is None:
                 raise FileNotFoundError(f"no committed schema at {self.path}")
             existing = {f.name.lower() for f in current.fields}
@@ -974,19 +979,17 @@ class TransactionLogTable:
                 current.fields
                 + [StructField(f.name, f.dataType, True) for f in added.fields]
             )
-            meta = {
-                "meta": {
-                    "op": "alter_add_columns",
-                    "ts": time.time(),
-                    "schema": evolved.json(),
+            return [
+                {
+                    "meta": {
+                        "op": "alter_add_columns",
+                        "ts": time.time(),
+                        "schema": evolved.json(),
+                    }
                 }
-            }
-            version = (self.latest_version() or 0) + 1
-            try:
-                self._commit(version, [meta])
-                return version
-            except ConcurrentCommitError:
-                continue
+            ]
+
+        return self._transact("alter_add_columns", attempt)
 
     def _scan(self, names: Iterable[str], version: int | None) -> DataFrame:
         """Scan the snapshot files ``names`` with the DECLARED log schema at
@@ -1218,7 +1221,6 @@ class TransactionLogTable:
         pks: Sequence[str],
         order_col: str,
         deleted_col: str = "_deleted",
-        max_retries: int = 5,
         txns: dict[str, int] | None = None,
     ) -> int | None:
         """File-level MERGE (DeltaTable.merge cost profile,
@@ -1232,8 +1234,7 @@ class TransactionLogTable:
         (small, O(#files)) stats list against the updates' keys — no
         driver-side key collection, so it holds when updates carry
         millions of keys. On a commit conflict the whole merge re-executes
-        against the winner's snapshot (serializable outcome), up to
-        ``max_retries`` times.
+        against the winner's snapshot (serializable outcome).
 
         ``txns`` ({app: version}) are recorded as ``txn`` actions in the
         same commit: the consumed-input watermark of an incremental
@@ -1243,45 +1244,31 @@ class TransactionLogTable:
         metadata-only ``merge`` version (with ``txns``) and runs no job.
         """
         key = pks[0]
-        txn_actions = [{"txn": {"app": a, "version": v}} for a, v in (txns or {}).items()]
-        for _ in range(max_retries):
-            base_version = self.latest_version()
-            if txns and not set(txns).isdisjoint(self.txn_versions(base_version)):
-                return None
-            touched: set[str] = set()
-            adds: list[dict] = []
+
+        def attempt(base, stage):
             if updates is None:
-                meta = self._meta("merge")
-            else:
-                n_files = None
-                if base_version is not None:
-                    snap = self.snapshot(base_version)
-                    touched = self.files_touched_by_keys(updates, key, base_version)
-                    n_files = max(
-                        1, sum(snap[n].get("bytes", 0) for n in touched) // TARGET_FILE_BYTES
-                    )
-                current = self._scan(touched, base_version) if touched else None
-                # drop the soft-delete flag from the STORED table: deleted
-                # rows are already filtered, and keeping a constant-False
-                # column would fork the snapshot schema between tables
-                # written before vs after the first delete arrived
-                merged = merge_upsert(current, updates, pks, order_col, deleted_col).drop(
-                    deleted_col
+                return [self._meta("merge")]
+            touched: set[str] = set()
+            n_files = None
+            if base is not None:
+                snap = self.snapshot(base)
+                touched = self.files_touched_by_keys(updates, key, base)
+                n_files = max(
+                    1, sum(snap[n].get("bytes", 0) for n in touched) // TARGET_FILE_BYTES
                 )
-                adds = self._stage_files(merged, sort_by=[key], n_files=n_files)
-                meta = self._meta("merge", merged)
+            current = self._scan(touched, base) if touched else None
+            # drop the soft-delete flag from the STORED table: deleted
+            # rows are already filtered, and keeping a constant-False
+            # column would fork the snapshot schema between tables
+            # written before vs after the first delete arrived
+            merged = merge_upsert(current, updates, pks, order_col, deleted_col).drop(
+                deleted_col
+            )
+            adds = stage(merged, sort_by=[key], n_files=n_files)
             removes = [{"remove": {"name": n}} for n in sorted(touched)]
-            version = (base_version or 0) + 1
-            try:
-                self._commit(version, [meta, *txn_actions, *removes, *adds])
-                return version
-            except ConcurrentCommitError:
-                for a in adds:
-                    os.remove(os.path.join(self.path, a["add"]["name"]))
-                continue
-        raise ConcurrentCommitError(
-            f"merge lost the commit race {max_retries} times at {self.path}"
-        )
+            return [self._meta("merge", merged, base), *removes, *adds]
+
+        return self._transact("merge", attempt, consumes=txns)
 
     def _discovery_candidates(self, condition: str, base_version: int) -> list[str]:
         """File set the verifying discovery scan must read (VERDICT r4
@@ -1303,117 +1290,76 @@ class TransactionLogTable:
                 pass  # literal incomparable with stats: never skip
         return sorted(self.snapshot(base_version))
 
-    def delete_where(self, condition: str, max_retries: int = 5) -> int:
-        """File-level DELETE: stats-seeded candidates, then a verifying
-        scan over ONLY the candidates finds the files actually containing
-        matching rows (via ``_metadata.file_path`` — one distributed scan,
-        no driver data), and only those are rewritten without the matches.
-        Files with no matching row keep their exact bytes.
+    def _rewrite_where(self, op: str, condition: str, rewrite) -> int:
+        """File-level DELETE/UPDATE: stats-seeded candidates, then a
+        verifying scan over ONLY the candidates finds the files actually
+        containing matching rows (via ``_metadata.file_path`` — one
+        distributed scan, no driver data), and only those are rewritten
+        as ``rewrite(rows, hit)``, ``hit`` being the condition with NULL
+        read as false. Files with no matching row keep their exact bytes;
+        with none at all nothing is committed and the base version is
+        returned.
 
-        A lost commit race RE-EXECUTES the delete against the winner's
+        A lost commit race RE-EXECUTES the rewrite against the winner's
         snapshot (a blind version-bump retry would replay removes/keeps
         computed from a stale file set and resurrect rows a concurrent
-        merge rewrote — the delete must be serialized AFTER the winner)."""
-        for _ in range(max_retries):
-            base_version = self.latest_version()
-            if base_version is None:
-                raise FileNotFoundError(f"no committed data at {self.path}")
-            cand = self._discovery_candidates(condition, base_version)
-            if not cand:
-                return base_version
-            df = self._scan(cand, base_version)
-            touched_abs = {
-                r["f"]
-                for r in df.filter(condition)
-                .select(F.col("_metadata.file_path").alias("f"))
-                .distinct()
-                .collect()
-            }
-            if not touched_abs:
-                return base_version
-            touched = {os.path.basename(p.replace("file://", "")) for p in touched_abs}
-            # keep rows where the condition is NOT TRUE — a bare NOT(cond)
-            # would drop NULL-evaluating rows from both sides (silent loss)
-            keep = self._scan(touched, base_version).filter(
-                ~F.coalesce(F.expr(condition), F.lit(False))
-            )
-            adds = self._stage_files(keep, sort_by=list(self.stats_cols[:1]))
-            removes = [{"remove": {"name": n}} for n in sorted(touched)]
-            try:
-                self._commit(
-                    base_version + 1, [self._meta("delete", keep), *removes, *adds]
-                )
-                return base_version + 1
-            except ConcurrentCommitError:
-                for a in adds:
-                    os.remove(os.path.join(self.path, a["add"]["name"]))
-                continue
-        raise ConcurrentCommitError(
-            f"delete lost the commit race {max_retries} times at {self.path}"
-        )
+        merge rewrote — the write must be serialized AFTER the winner)."""
 
-    def update_where(
-        self, condition: str, assignments: dict[str, str], max_retries: int = 5
-    ) -> int:
-        """File-level UPDATE (Delta ``UPDATE t SET ... WHERE ...``): the
-        scan finds files actually containing matching rows (via
-        ``_metadata.file_path`` — one distributed scan, no driver data);
-        only those are rewritten, applying each ``col -> SQL expr``
-        assignment to the matching rows and keeping the rest verbatim.
-        Same serialization contract as delete_where: a lost commit race
-        re-executes against the winner's snapshot."""
-        for _ in range(max_retries):
-            base_version = self.latest_version()
-            if base_version is None:
+        def attempt(base, stage):
+            if base is None:
                 raise FileNotFoundError(f"no committed data at {self.path}")
-            cand = self._discovery_candidates(condition, base_version)
+            cand = self._discovery_candidates(condition, base)
             if not cand:
-                return base_version
-            df = self._scan(cand, base_version)
-            touched_abs = {
-                r["f"]
-                for r in df.filter(condition)
+                return base
+            hits = (
+                self._scan(cand, base)
+                .filter(condition)
                 .select(F.col("_metadata.file_path").alias("f"))
                 .distinct()
                 .collect()
-            }
-            if not touched_abs:
-                return base_version
-            touched = {os.path.basename(p.replace("file://", "")) for p in touched_abs}
-            cond = F.coalesce(F.expr(condition), F.lit(False))
-            current = self._scan(touched, base_version)
-            rewritten = current.select(
+            )
+            if not hits:
+                return base
+            touched = {os.path.basename(r["f"].replace("file://", "")) for r in hits}
+            out = rewrite(
+                self._scan(touched, base), F.coalesce(F.expr(condition), F.lit(False))
+            )
+            adds = stage(out, sort_by=list(self.stats_cols[:1]))
+            removes = [{"remove": {"name": n}} for n in sorted(touched)]
+            return [self._meta(op, out, base), *removes, *adds]
+
+        return self._transact(op, attempt)
+
+    def delete_where(self, condition: str) -> int:
+        """File-level DELETE (see :meth:`_rewrite_where`): the touched
+        files keep the rows where the condition is NOT TRUE — a bare
+        NOT(cond) would drop NULL-evaluating rows from both sides (silent
+        loss)."""
+        return self._rewrite_where("delete", condition, lambda rows, hit: rows.filter(~hit))
+
+    def update_where(self, condition: str, assignments: dict[str, str]) -> int:
+        """File-level UPDATE (Delta ``UPDATE t SET ... WHERE ...``, see
+        :meth:`_rewrite_where`): the touched files apply each ``col -> SQL
+        expr`` assignment to the matching rows and keep the rest
+        verbatim."""
+
+        def rewrite(rows: DataFrame, hit) -> DataFrame:
+            return rows.select(
                 *[
-                    F.when(cond, F.expr(assignments[c]).cast(dt))
-                    .otherwise(F.col(c))
-                    .alias(c)
+                    F.when(hit, F.expr(assignments[c]).cast(dt)).otherwise(F.col(c)).alias(c)
                     if c in assignments
                     else F.col(c)
-                    for c, dt in current.dtypes
+                    for c, dt in rows.dtypes
                 ]
             )
-            adds = self._stage_files(rewritten, sort_by=list(self.stats_cols[:1]))
-            removes = [{"remove": {"name": n}} for n in sorted(touched)]
-            try:
-                self._commit(
-                    base_version + 1,
-                    [self._meta("update", rewritten), *removes, *adds],
-                )
-                return base_version + 1
-            except ConcurrentCommitError:
-                for a in adds:
-                    os.remove(os.path.join(self.path, a["add"]["name"]))
-                continue
-        raise ConcurrentCommitError(
-            f"update lost the commit race {max_retries} times at {self.path}"
-        )
+
+        return self._rewrite_where("update", condition, rewrite)
 
     # -- maintenance ------------------------------------------------------
 
     def compact(
         self,
         max_file_bytes: int = TARGET_FILE_BYTES,
-        max_retries: int = 5,
         zorder_by: Sequence[str] = (),
     ) -> int | None:
         """OPTIMIZE: bin-pack the files SMALLER than ``max_file_bytes``
@@ -1439,11 +1385,15 @@ class TransactionLogTable:
             # stats on BOTH z-keys are the point of the re-cluster —
             # pruning on either key needs its per-file [min,max]
             self.stats_cols = tuple(dict.fromkeys([*self.stats_cols, *zorder_by]))
-        for _ in range(max_retries):
-            base_version = self.latest_version()
-            if base_version is None:
+
+        # The commit is pinned to base+1: ANY interleaved commit (e.g. a
+        # merge that rewrote one of our source files) forces a conflict
+        # and a full re-execution — committing at a later version would
+        # silently re-add the stale pre-merge rows.
+        def attempt(base, stage):
+            if base is None:
                 return None
-            snap = self.snapshot(base_version)
+            snap = self.snapshot(base)
             if zorder_by:
                 small = sorted(snap)
                 if not small:
@@ -1463,30 +1413,15 @@ class TransactionLogTable:
             # evolution — first-file-wins inference would silently drop
             # evolved-column values from newer files (same hazard ADVICE
             # r4 flagged for MERGE's touched-file read)
-            df = self._scan(small, base_version)
+            df = self._scan(small, base)
             if zorder_by:
-                adds = self._stage_files(df, zorder_by=tuple(zorder_by))
+                adds = stage(df, zorder_by=tuple(zorder_by))
             else:
-                adds = self._stage_files(
-                    df, sort_by=list(self.stats_cols[:1]), n_files=n_out
-                )
+                adds = stage(df, sort_by=list(self.stats_cols[:1]), n_files=n_out)
             removes = [{"remove": {"name": n}} for n in sorted(small)]
-            # commit pinned to base_version+1: ANY interleaved commit
-            # (e.g. a merge that rewrote one of our source files) forces a
-            # conflict and a full re-execution — committing at a later
-            # version would silently re-add the stale pre-merge rows
-            try:
-                self._commit(
-                    base_version + 1, [self._meta("optimize"), *removes, *adds]
-                )
-                return base_version + 1
-            except ConcurrentCommitError:
-                for a in adds:
-                    os.remove(os.path.join(self.path, a["add"]["name"]))
-                continue
-        raise ConcurrentCommitError(
-            f"compact lost the commit race {max_retries} times at {self.path}"
-        )
+            return [self._meta("optimize"), *removes, *adds]
+
+        return self._transact("compact", attempt)
 
     def layout_report(self, col: str | None = None) -> dict:
         """Layout/clustering audit over the current snapshot — what an

@@ -67,15 +67,17 @@ def process_cdc_stream(
     available_now: bool = False,
 ) -> StreamingQuery:
     """S4+S5 (streaming_bronze.py:95-110): foreachBatch append, partitioned
-    by _source_table, skipping empty batches; micro-batch trigger +
-    checkpoint. ``available_now=True`` drains the source then stops
-    (hermetic tests); otherwise the processing-time trigger is used."""
+    by _source_table; micro-batch trigger + checkpoint.
+    ``available_now=True`` drains the source then stops (hermetic tests);
+    otherwise the processing-time trigger is used. The reference skips
+    empty batches (streaming_bronze.py:96-97); here a partitioned append
+    of an empty batch writes no data file, so the skip needs no
+    ``isEmpty`` job."""
     projected = bronze_projection(stream, source_table)
     bronze = LakehouseTable(stream.sparkSession, bronze_path)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.isEmpty():  # empty-batch skip, streaming_bronze.py:96-97
-            bronze.append(batch_df, partition_by=("_source_table",))
+        bronze.append(batch_df, partition_by=("_source_table",))
 
     writer = projected.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_path

@@ -36,8 +36,8 @@ def txnlog_append_sink(
     each tracked separately, exactly like Delta's ``txnAppId``)."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.isEmpty():
-            table.append_txn(batch_df, app_id, batch_id, sort_by=list(sort_by))
+        if not batch_df.isEmpty():  # an empty batch would commit an empty version
+            table.append(batch_df, sort_by=list(sort_by), txn=(app_id, batch_id))
 
     writer = stream.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_path

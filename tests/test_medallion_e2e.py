@@ -173,6 +173,22 @@ def _land(spark, lake, lines):
     LakehouseTable(spark, f"{lake}/bronze/orders").append(batch, partition_by=("_source_table",))
 
 
+def test_empty_bronze_batch_writes_no_data_file(spark, tmp_path):
+    # process_cdc_stream appends every micro-batch without an isEmpty()
+    # probe: a partitioned append of an empty batch must leave no file
+    # that a bronze reader lists
+    lake = str(tmp_path / "lake")
+    bronze = LakehouseTable(spark, f"{lake}/bronze/orders")
+    empty = spark.createDataFrame([], "_raw_value string, _source_table string")
+    bronze.append(empty, partition_by=("_source_table",))
+    assert bronze.files() == []
+    _land(spark, lake, [_event("c", "o1", 1000)])
+    landed = bronze.files()
+    bronze.append(empty, partition_by=("_source_table",))
+    assert len(landed) == 1 and bronze.files() == landed
+    assert jobs.run_silver(spark, lake) == (1, 0)
+
+
 def _silver_state(spark, lake):
     silver = TransactionLogTable(spark, f"{lake}/silver/orders")
     return {r.order_id: (r.order_status, r.amount) for r in silver.read().collect()}

@@ -15,6 +15,7 @@ import threading
 import pytest
 from pyspark.sql import functions as F
 
+from end_to_end_data_lakehouse_pipeline_spark.sources.dml import execute_dml
 from end_to_end_data_lakehouse_pipeline_spark.sources.txnlog import (
     ConcurrentCommitError,
     TransactionLogTable,
@@ -302,14 +303,14 @@ def test_empty_table_after_full_delete_keeps_schema(spark, tbl):
 def test_append_txn_idempotent_under_redelivery(spark, tbl):
     """The Delta ``txn`` action: same (app, batch) commits at most once."""
     df = _mk(spark, [(1, "a", 1)])
-    v1 = tbl.append_txn(df, "streamA", 0)
+    v1 = tbl.append(df, txn=("streamA", 0))
     assert v1 == 1
     # redelivery of the SAME batch id -> no-op, no duplicate rows
-    assert tbl.append_txn(df, "streamA", 0) is None
+    assert tbl.append(df, txn=("streamA", 0)) is None
     assert tbl.read().count() == 1
     # next batch lands; an independent app's batch 0 also lands
-    assert tbl.append_txn(_mk(spark, [(2, "b", 1)]), "streamA", 1) == 2
-    assert tbl.append_txn(_mk(spark, [(3, "c", 1)]), "streamB", 0) == 3
+    assert tbl.append(_mk(spark, [(2, "b", 1)]), txn=("streamA", 1)) == 2
+    assert tbl.append(_mk(spark, [(3, "c", 1)]), txn=("streamB", 0)) == 3
     assert tbl.read().count() == 3
     assert tbl.txn_versions() == {"streamA": 1, "streamB": 0}
 
@@ -317,14 +318,14 @@ def test_append_txn_idempotent_under_redelivery(spark, tbl):
 def test_txn_versions_survive_checkpoint(spark, tbl):
     # interval=5: versions 1..6 cross a checkpoint at v5
     for i in range(6):
-        tbl.append_txn(_mk(spark, [(i, "x", 1)]), "app", i)
+        tbl.append(_mk(spark, [(i, "x", 1)]), txn=("app", i))
     assert os.path.isfile(
         os.path.join(tbl.path, "_txn_log", f"{5:020d}.checkpoint.json")
     )
     # watermark reconstructed THROUGH the checkpoint, so a redelivery of
     # an old batch is still recognized
     assert tbl.txn_versions() == {"app": 5}
-    assert tbl.append_txn(_mk(spark, [(99, "dup", 1)]), "app", 2) is None
+    assert tbl.append(_mk(spark, [(99, "dup", 1)]), txn=("app", 2)) is None
     assert tbl.read().count() == 6
 
 
@@ -550,12 +551,12 @@ def test_append_txn_same_batch_race_single_landing(spark, tbl):
             fired["n"] = 1
             # the twin delivery of the SAME (app, batch) lands first
             t2 = TransactionLogTable(spark, tbl.path, stats_cols=("k",))
-            assert t2.append_txn(_mk(spark, [(1, "twin", 1)]), "app", 7) == 2
+            assert t2.append(_mk(spark, [(1, "twin", 1)]), txn=("app", 7)) == 2
         return real_commit(version, actions)
 
     tbl._commit = racing_commit
     try:
-        out = tbl.append_txn(_mk(spark, [(1, "mine", 1)]), "app", 7)
+        out = tbl.append(_mk(spark, [(1, "mine", 1)]), txn=("app", 7))
     finally:
         tbl._commit = real_commit
     assert out is None and fired["n"] == 1
@@ -627,9 +628,20 @@ def test_alter_add_columns_metadata_only_evolution(spark, tmp_path):
         t.alter_add_columns("v STRING")
 
 
-def test_append_lost_race_revalidates_new_constraint(spark, tmp_path):
+_STAGE_ONCE_WRITES = {
+    "append": lambda t, df: t.append(df),
+    "append_txn": lambda t, df: t.append(df, txn=("app", 0)),
+    "overwrite": lambda t, df: t.overwrite(df),
+    "overwrite_txn": lambda t, df: t.overwrite(df, txn=("app", 0)),
+}
+
+
+@pytest.mark.parametrize("write", sorted(_STAGE_ONCE_WRITES))
+def test_append_lost_race_revalidates_new_constraint(spark, tmp_path, write):
     """A constraint committed between an append's staging and its commit
-    must reject the append on the retry path (metadata conflict check)."""
+    must reject the append on the retry path (metadata conflict check).
+    The writes that reuse their staged files on a retry all take it,
+    with or without a txn watermark."""
     from end_to_end_data_lakehouse_pipeline_spark.sources import txnlog as T
 
     t = T.TransactionLogTable(spark, str(tmp_path / "race"), stats_cols=("k",))
@@ -651,11 +663,12 @@ def test_append_lost_race_revalidates_new_constraint(spark, tmp_path):
     import pytest as _pytest
 
     with _pytest.raises(T.ConstraintViolation):
-        t.append(spark.createDataFrame([(-7, "bad")], ["k", "v"]))
+        _STAGE_ONCE_WRITES[write](t, spark.createDataFrame([(-7, "bad")], ["k", "v"]))
     t._commit = orig_commit
     # nothing committed, no orphan staged files referenced, table readable
     assert {r.k for r in t.read().collect()} == {1}
     assert t.constraints() == {"k_pos": "k >= 0"}
+    assert set(_digest(t.path)) == set(t.snapshot())
 
 
 def test_add_constraint_revalidates_after_lost_race(spark, tmp_path):
@@ -749,6 +762,85 @@ def test_alter_add_columns_merges_concurrent_alter(spark, tmp_path):
     assert cols == ["k", "v", "w", "z", "dup"]  # exactly one dup column
 
 
+@pytest.mark.parametrize("txn", [None, ("app", 0)], ids=["append", "append_txn"])
+def test_append_lost_race_keeps_concurrent_alter(spark, tmp_path, txn):
+    """An append that loses its race to ALTER ADD COLUMNS records the
+    winner's schema plus its own columns: a schema built before the race
+    would drop the added column from the declared schema."""
+    t = TransactionLogTable(spark, str(tmp_path / "race_alter"), stats_cols=("k",))
+    t.append(spark.createDataFrame([(1, "a")], ["k", "v"]))
+    orig_commit = t._commit
+    state = {"raced": False}
+
+    def racing_commit(version, actions):
+        if not state["raced"] and any("add" in a for a in actions):
+            state["raced"] = True
+            t2 = TransactionLogTable(spark, t.path, stats_cols=("k",))
+            t2.alter_add_columns("tier STRING")
+            raise ConcurrentCommitError("simulated lost race")
+        return orig_commit(version, actions)
+
+    t._commit = racing_commit
+    try:
+        assert t.append(spark.createDataFrame([(2, "b")], ["k", "v"]), txn=txn) == 3
+    finally:
+        t._commit = orig_commit
+    assert t.read().columns == ["k", "v", "tier"]
+    assert sorted((r.k, r.tier) for r in t.read().collect()) == [(1, None), (2, None)]
+
+
+_WRITES = {
+    **_STAGE_ONCE_WRITES,
+    "merge": lambda t, df: t.merge(df, pks=["k"], order_col="updated_at"),
+    "merge_txns": lambda t, df: t.merge(
+        df, pks=["k"], order_col="updated_at", txns={"feed": 1}
+    ),
+    "delete_where": lambda t, df: t.delete_where("k = 1"),
+    "update_where": lambda t, df: t.update_where("k = 1", {"v": "'z'"}),
+    "compact": lambda t, df: t.compact(),
+    "restore": lambda t, df: t.restore(1),
+    "add_constraint": lambda t, df: t.add_constraint("k_pos", "k >= 0"),
+    "drop_constraint": lambda t, df: t.drop_constraint("k_small"),
+    "alter_add_columns": lambda t, df: t.alter_add_columns("tier STRING"),
+    "sql_merge": lambda t, df: execute_dml(
+        t.spark,
+        "MERGE INTO t USING s ON t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+        tables={"t": t},
+        sources={"s": df},
+    ),
+}
+
+
+@pytest.mark.parametrize("write", sorted(_WRITES))
+def test_every_write_gives_up_after_commit_attempts(spark, tbl, write):
+    """Every committing write shares one retry limit: when each commit
+    loses its race it raises after COMMIT_ATTEMPTS tries and leaves none
+    of its staged files behind."""
+    from end_to_end_data_lakehouse_pipeline_spark.sources.txnlog import COMMIT_ATTEMPTS
+
+    tbl.append(_mk(spark, [(1, "a", 1)]))
+    tbl.append(_mk(spark, [(2, "b", 1)]))
+    tbl.add_constraint("k_small", "k < 100")
+    files = set(_digest(tbl.path))
+    calls = []
+
+    def lose(version, actions):
+        calls.append(version)
+        if len(calls) > 50:
+            pytest.fail("the commit is retried without a limit")
+        raise ConcurrentCommitError("simulated lost race")
+
+    tbl._commit = lose
+    try:
+        with pytest.raises(ConcurrentCommitError, match="lost the commit race"):
+            _WRITES[write](tbl, _mk(spark, [(1, "z", 2), (3, "c", 2)]))
+    finally:
+        del tbl._commit
+    assert len(calls) == COMMIT_ATTEMPTS
+    assert set(_digest(tbl.path)) == files
+
+
 def test_update_delete_discovery_is_stats_seeded(spark, tmp_path):
     """VERDICT r4 task 2: update_where/delete_where must seed their
     touched-file discovery from log stats — a 1%-range predicate plans a
@@ -803,7 +895,7 @@ def test_update_delete_discovery_is_stats_seeded(spark, tmp_path):
 def test_ivm_multibatch_exactly_once(spark, tmp_path):
     """Incremental MV maintenance as a multi-batch loop with the Delta
     txn watermark: three CDC merges into the source, each folding its
-    signed CDF delta into a result table via overwrite_txn. Batch 2 is
+    signed CDF delta into a result table via overwrite(txn=...). Batch 2 is
     REDELIVERED with a stale payload — the watermark must no-op it —
     and the final MV must equal the direct recompute."""
     from pyspark.sql import functions as F
@@ -848,7 +940,7 @@ def test_ivm_multibatch_exactly_once(spark, tmp_path):
             )
             .filter(F.col("n") > 0)
         )
-        mv.overwrite_txn(new, app_id="ivm", batch_id=to_v, sort_by=["bucket"])
+        mv.overwrite(new, sort_by=["bucket"], txn=("ivm", to_v))
 
     # bootstrap: fold from the empty state (version 0 has no files)
     fold(0, 1)
@@ -869,7 +961,7 @@ def test_ivm_multibatch_exactly_once(spark, tmp_path):
 
     # redelivery of the LAST batch with a stale (empty) payload: no-op
     stale = spark.createDataFrame([], "bucket long, n long, total long")
-    assert mv.overwrite_txn(stale, app_id="ivm", batch_id=prev) is None
+    assert mv.overwrite(stale, txn=("ivm", prev)) is None
     assert {r.bucket: (r.n, r.total) for r in mv.read().collect()} == final
 
     # direct recompute from the source's final snapshot must agree
